@@ -9,10 +9,12 @@ import scala.jdk.CollectionConverters._
   * `src/DatabaseAgent.php:70-81` — the `agentForPdo` factory that picks a
   * sqlite or mysql agent from the connection's driver name).
   *
-  * The accounting LOGIC (upserts, checkpoints, change filter) lives in
-  * [[MetaStore]] and is backend-agnostic; a backend only has to provide
-  * atomic whole-table replace + read. Two backends ship, mirroring the
-  * reference's two agents:
+  * A backend provides whole-table read and atomic replace; the accounting
+  * logic is in [[MetaStore]]. The tables are metadata-scale (one row per
+  * spreadsheet or job), so [[MetaStore]] decides over collected rows and a
+  * driver-held backend is legitimate here; target DATA always goes
+  * through [[TargetStore]]'s distributed writes. Two backends ship,
+  * mirroring the reference's two agents:
   *
   *   - [[SnapshotMetaStorage]] — durable parquet snapshot directories with
   *     write-temp-then-rename replace (the "mysql" role: the real
@@ -21,10 +23,6 @@ import scala.jdk.CollectionConverters._
   *     role: tests and dry runs; the reference's own unit tests run its
   *     sqlite agent against `sqlite::memory:`,
   *     `tests/DatabaseAgentSqliteTest.php:17-30`).
-  *
-  * Accounting tables are metadata-scale (one row per spreadsheet / job) —
-  * a driver-side in-memory variant is legitimate there and only there;
-  * target DATA always goes through [[TargetStore]]'s distributed writes.
   */
 trait MetaStorage {
 
@@ -77,7 +75,10 @@ object MetaStorage {
 }
 
 /** Durable parquet-snapshot backend: each table is a directory replaced via
-  * write-temp-then-rename (crash window ⇒ idempotent redo, SURVEY.md §7.4).
+  * write-temp-then-rename. A crash between the two renames of [[replace]]
+  * leaves only `<table>.old`; every entry point first renames it back, so
+  * the last committed snapshot survives (an uncommitted `.tmp` is
+  * discarded, and the §7.4 ordering makes that an idempotent redo).
   */
 final class SnapshotMetaStorage(
     spark: SparkSession,
@@ -89,23 +90,30 @@ final class SnapshotMetaStorage(
   private def fs =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  override def exists(table: String): Boolean =
-    fs.exists(new Path(tablePath(table)))
+  /** The live snapshot, restored from `.old` if a replace crashed between
+    * its renames. */
+  private def live(table: String): Path = {
+    val dst = new Path(tablePath(table))
+    val old = new Path(tablePath(table) + ".old")
+    if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
+    dst
+  }
+
+  override def exists(table: String): Boolean = fs.exists(live(table))
 
   // Explicit schema: a fresh snapshot dir may hold zero part files (Spark
   // skips empty-partition writes), so inference would fail/warn there.
   override def read(table: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(tablePath(table))
+    spark.read.schema(schema).parquet(live(table).toString)
 
   /** The write to `tmp` materializes the plan (which may read the current
     * snapshot) before the old snapshot is replaced — no read-while-overwrite
     * hazard.
     */
   override def replace(table: String, df: DataFrame): Unit = {
-    val path = tablePath(table)
-    val tmp = new Path(path + ".tmp")
-    val dst = new Path(path)
-    val old = new Path(path + ".old")
+    val dst = live(table)
+    val tmp = new Path(tablePath(table) + ".tmp")
+    val old = new Path(tablePath(table) + ".old")
     // repartition(1), not coalesce: an empty Dataset has zero partitions and
     // coalesce would write no schema-bearing part file, breaking re-read.
     df.repartition(1).write.mode("overwrite").parquet(tmp.toString)

@@ -1,8 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** `__meta_spreadsheets` row (SURVEY.md §1.1.2; reference:
   * src/DatabaseAgentMysql.php:98-106). `google_modified` is an RFC 3339
@@ -28,21 +26,19 @@ final case class EtlJobRow(
 
 /** The ETL accounting store (R14–R17, R19–R20, R25).
   *
-  * All accounting LOGIC lives here, expressed as Spark plans; physical
-  * storage is behind the [[MetaStorage]] trait (R27 — the reference's
-  * sqlite/mysql agent split, `src/DatabaseAgent.php:70-81`), so the same
-  * upsert/checkpoint/filter semantics run against any backend.
+  * Both tables are metadata-scale: one row per tracked spreadsheet and one
+  * per configured (spreadsheet, sheet). Every operation is the reference's
+  * small SQL upsert or lookup (src/DatabaseAgentMysql.php:24-230), done on
+  * the driver: a method collects each table it needs at most once, decides
+  * over the rows, and hands each table it changes to
+  * [[MetaStorage.replace]] at most once. Physical storage stays behind the
+  * [[MetaStorage]] trait (R27), so the same semantics run on any backend.
   *
-  * The observable "no partial effect" contract of
-  * reference: src/DatabaseAgent.php:136-142 is preserved by ordering: target
-  * data commits first, the job hash commits last, and a stale hash only
-  * causes a redundant, idempotent reload (SURVEY.md §7.4).
-  *
-  * Scale note: accounting tables are metadata-scale (1 row per spreadsheet /
-  * job), so snapshots coalesce to 1 file; upserts are still expressed as
-  * distributed window-dedup plans, so the same code holds if the fleet of
-  * tracked sheets grows by orders of magnitude (drop the coalesce, keep the
-  * plan).
+  * Ordering invariant (SURVEY.md §7.4; the reference's "no partial effect"
+  * contract, src/DatabaseAgent.php:136-142): per sheet, a new job row is
+  * durable before its first data write ([[ensureJob]]), and the hash and
+  * `google_modified` commit only after the data ([[commitJob]]). A crash in
+  * between leaves a stale hash, so the next run redoes an idempotent reload.
   */
 final class MetaStore(spark: SparkSession, storage: MetaStorage) {
   import spark.implicits._
@@ -73,10 +69,8 @@ final class MetaStore(spark: SparkSession, storage: MetaStorage) {
     * cause data loss or error").
     */
   def setUpAccounting(): Unit = {
-    if (!storage.exists(SpreadsheetsTable))
-      storage.replace(SpreadsheetsTable, spark.emptyDataset[SpreadsheetSeen].toDF())
-    if (!storage.exists(EtlJobsTable))
-      storage.replace(EtlJobsTable, spark.emptyDataset[EtlJobRow].toDF())
+    if (!storage.exists(SpreadsheetsTable)) writeSpreadsheets(Nil)
+    if (!storage.exists(EtlJobsTable)) writeJobs(Nil)
   }
 
   def spreadsheets: Dataset[SpreadsheetSeen] =
@@ -85,106 +79,90 @@ final class MetaStore(spark: SparkSession, storage: MetaStorage) {
   def etlJobs: Dataset[EtlJobRow] =
     storage.read(EtlJobsTable, etlJobsSchema).as[EtlJobRow]
 
+  private def writeSpreadsheets(rows: Seq[SpreadsheetSeen]): Unit =
+    storage.replace(SpreadsheetsTable, rows.toDS().toDF())
+
+  private def writeJobs(rows: Seq[EtlJobRow]): Unit =
+    storage.replace(EtlJobsTable, rows.toDS().toDF())
+
   /** Checkpoint read (R14; reference: src/DatabaseAgentMysql.php:24-35):
     * greatest `(google_modified, google_spreadsheet_id)` lexical tuple.
-    * Catalyst plans this as TakeOrderedAndProject — no full sort.
     */
   def getGreatestModified(): Option[(String, String)] =
-    spreadsheets
-      .orderBy(desc("google_modified"), desc("google_spreadsheet_id"))
-      .limit(1)
-      .select("google_modified", "google_spreadsheet_id")
-      .as[(String, String)].collect().headOption
+    spreadsheets.collect()
+      .map(s => (s.google_modified, s.google_spreadsheet_id)).maxOption
 
   /** Audit pick (R15; reference: src/DatabaseAgentMysql.php:38-49): id with
     * smallest `last_seen` (id tie-break added for determinism — the
     * reference's bare `ORDER BY last_seen LIMIT 1` leaves ties unspecified).
     */
   def getOldestSeen(): Option[String] =
-    spreadsheets
-      .orderBy(asc("last_seen"), asc("google_spreadsheet_id"))
-      .limit(1)
-      .select("google_spreadsheet_id")
-      .as[String].collect().headOption
+    spreadsheets.collect()
+      .map(s => (s.last_seen, s.google_spreadsheet_id)).minOption.map(_._2)
 
   /** Upsert spreadsheets-seen (R17; reference:
     * src/DatabaseAgentMysql.php:130-149): last-writer-wins keyed on the
-    * unique `google_spreadsheet_id`; new keys get fresh increasing ids
-    * (reference keeps ids increasing for insert speed,
-    * src/DatabaseAgent.php:17-18 — here they are stable FK targets).
+    * unique `google_spreadsheet_id`; new keys get fresh increasing ids,
+    * `max(id) + rank` in `google_spreadsheet_id` order (reference keeps ids
+    * increasing for insert speed, src/DatabaseAgent.php:17-18 — here they
+    * are stable FK targets).
     */
   def setSpreadsheetsSeen(metas: Seq[SpreadsheetMeta], lastSeen: Long): Unit = {
     if (metas.isEmpty) return
-    val incoming = metas.map(m =>
-      SpreadsheetSeen(0L, m.id, m.modifiedTime, m.name, lastSeen)).toDS().toDF()
-    val existing = spreadsheets.toDF()
-    val key = col("google_spreadsheet_id")
-    val merged = existing.withColumn("_prec", lit(0))
-      .unionByName(incoming.withColumn("_prec", lit(1)))
-      // carry the existing id (if any) to the winning row
-      .withColumn("_id", max(when(col("_prec") === 0, col("id"))).over(
-        Window.partitionBy(key)))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(key).orderBy(desc("_prec"))))
-      .filter(col("_rn") === 1)
-    val maxId = existing.agg(coalesce(max("id"), lit(0L))).as[Long].head()
-    val out = merged
-      .withColumn("id", when(col("_id").isNotNull, col("_id"))
-        .otherwise(lit(maxId) + row_number().over(
-          Window.partitionBy(col("_id").isNull).orderBy(key))))
-      .select("id", "google_spreadsheet_id", "google_modified",
-        "google_spreadsheet_name", "last_seen")
-    storage.replace(SpreadsheetsTable, out)
+    val existing = spreadsheets.collect()
+    val idOf = existing.map(s => s.google_spreadsheet_id -> s.id).toMap
+    val incoming = metas.map(m => m.id -> m).toMap // a later duplicate wins
+    val maxId = existing.map(_.id).maxOption.getOrElse(0L)
+    val newIds = incoming.keys.filterNot(idOf.contains).toSeq.sorted
+      .zipWithIndex.map { case (k, i) => k -> (maxId + i + 1) }.toMap
+    val upserted = incoming.values.map(m => SpreadsheetSeen(
+      idOf.getOrElse(m.id, newIds(m.id)), m.id, m.modifiedTime, m.name, lastSeen))
+    writeSpreadsheets(
+      existing.filterNot(s => incoming.contains(s.google_spreadsheet_id)).toSeq ++ upserted)
   }
 
   def setSpreadsheetSeen(meta: SpreadsheetMeta, lastSeen: Long): Unit =
     setSpreadsheetsSeen(Seq(meta), lastSeen)
 
   /** Change filter (R16; reference: src/DatabaseAgentMysql.php:52-87):
-    * drop jobs whose (spreadsheet, sheet) is already loaded at the current
-    * `google_modified` — a left-anti join against the up-to-date set.
-    * Config lists are small ⇒ Catalyst broadcasts both sides.
+    * keep jobs whose spreadsheet has been discovered and whose
+    * (spreadsheet, sheet) is not already loaded at the current
+    * `google_modified`. A configured spreadsheet beyond the discovery pages
+    * read so far waits for the tick that discovers it; the cursor only
+    * moves forward, so that tick comes.
     */
   def filterExtractable(jobs: Seq[EtlConfig]): Seq[EtlConfig] = {
     if (jobs.isEmpty) return jobs
-    val upToDate = spreadsheets.toDF().alias("s")
-      .join(etlJobs.toDF().alias("j"), col("j.spreadsheet_id") === col("s.id"))
-      .filter(col("s.google_modified") === col("j.google_modified"))
-      .select(col("s.google_spreadsheet_id"), col("j.sheet_name"))
-      .as[(String, String)].collect().toSet
-    jobs.filterNot(j => upToDate.contains((j.googleSpreadsheetId, j.sheetName)))
+    val byId = spreadsheets.collect().map(s => s.id -> s).toMap
+    val discovered = byId.values.map(_.google_spreadsheet_id).toSet
+    val upToDate = etlJobs.collect().flatMap(j => byId.get(j.spreadsheet_id)
+      .filter(_.google_modified == j.google_modified)
+      .map(s => (s.google_spreadsheet_id, j.sheet_name))).toSet
+    jobs.filter(j => discovered(j.googleSpreadsheetId) &&
+      !upToDate((j.googleSpreadsheetId, j.sheetName)))
   }
 
-  /** Hash lookup (R19; reference: src/DatabaseAgentMysql.php:198-211). Must
-    * be read *before* this load's accounting writes (SURVEY.md §7.4).
+  /** Ensure the job row exists and return it: its id is the lineage FK,
+    * and its `raw_columns_rows_hash` is the hash on record from before this
+    * load (R19; reference: src/DatabaseAgentMysql.php:198-211), "" when
+    * never loaded. Writes only a new row or a re-pointed `target_table`;
+    * `google_modified` and the hash advance in [[commitJob]], after the
+    * target data is durably written.
     */
-  def getJobHash(googleSpreadsheetId: String, sheetName: String): Option[String] =
-    etlJobs.toDF().alias("j")
-      .join(spreadsheets.toDF().alias("s"), col("j.spreadsheet_id") === col("s.id"))
-      .filter(col("s.google_spreadsheet_id") === googleSpreadsheetId &&
-        col("j.sheet_name") === sheetName)
-      .select(col("j.raw_columns_rows_hash"))
-      .as[String].collect().headOption.filter(_.nonEmpty)
-
-  /** Ensure a job row exists and return its id (lineage FK). Does NOT
-    * advance `google_modified`/hash — that happens in [[commitJob]], after
-    * the target data is durably written (§7.4 ordering).
-    */
-  def ensureJob(googleSpreadsheetId: String, sheetName: String, targetTable: String): Long = {
+  def ensureJob(googleSpreadsheetId: String, sheetName: String, targetTable: String): EtlJobRow = {
     val sid = spreadsheetIdOf(googleSpreadsheetId)
-    jobIdOf(sid, sheetName) match {
-      case Some(id) =>
-        // target table may legitimately be re-pointed by config
-        val updated = etlJobs.toDF()
-          .withColumn("target_table",
-            when(col("id") === id, lit(targetTable)).otherwise(col("target_table")))
-        storage.replace(EtlJobsTable, updated)
-        id
+    val jobs = etlJobs.collect().toSeq
+    jobs.find(j => j.spreadsheet_id == sid && j.sheet_name == sheetName) match {
+      case Some(job) if job.target_table == targetTable => job
+      case Some(job) => // target table may legitimately be re-pointed by config
+        val moved = job.copy(target_table = targetTable)
+        writeJobs(jobs.map(j => if (j.id == job.id) moved else j))
+        moved
       case None =>
-        val maxId = etlJobs.agg(coalesce(max("id"), lit(0L))).as[Long].head()
-        val row = Seq(EtlJobRow(maxId + 1, sid, sheetName, targetTable, "", "")).toDS().toDF()
-        storage.replace(EtlJobsTable, etlJobs.toDF().unionByName(row))
-        maxId + 1
+        val job = EtlJobRow(jobs.map(_.id).maxOption.getOrElse(0L) + 1, sid,
+          sheetName, targetTable, "", "")
+        writeJobs(jobs :+ job)
+        job
     }
   }
 
@@ -193,28 +171,17 @@ final class MetaStore(spark: SparkSession, storage: MetaStorage) {
     * the spreadsheet row's current `google_modified` into the job row).
     */
   def commitJob(googleSpreadsheetId: String, sheetName: String, hash: String): Unit = {
-    val sid = spreadsheetIdOf(googleSpreadsheetId)
-    val modified = spreadsheets
-      .filter(col("google_spreadsheet_id") === googleSpreadsheetId)
-      .select("google_modified").as[String].head()
-    val updated = etlJobs.toDF()
-      .withColumn("_hit", col("spreadsheet_id") === sid && col("sheet_name") === sheetName)
-      .withColumn("google_modified",
-        when(col("_hit"), lit(modified)).otherwise(col("google_modified")))
-      .withColumn("raw_columns_rows_hash",
-        when(col("_hit"), lit(hash)).otherwise(col("raw_columns_rows_hash")))
-      .drop("_hit")
-    storage.replace(EtlJobsTable, updated)
+    val sheet = seen(googleSpreadsheetId)
+    writeJobs(etlJobs.collect().toSeq.map(j =>
+      if (j.spreadsheet_id == sheet.id && j.sheet_name == sheetName)
+        j.copy(google_modified = sheet.google_modified, raw_columns_rows_hash = hash)
+      else j))
   }
 
-  def spreadsheetIdOf(googleSpreadsheetId: String): Long =
-    spreadsheets.filter(col("google_spreadsheet_id") === googleSpreadsheetId)
-      .select("id").as[Long].collect().headOption
+  def spreadsheetIdOf(googleSpreadsheetId: String): Long = seen(googleSpreadsheetId).id
+
+  private def seen(googleSpreadsheetId: String): SpreadsheetSeen =
+    spreadsheets.collect().find(_.google_spreadsheet_id == googleSpreadsheetId)
       .getOrElse(throw new NoSuchElementException(
         s"Spreadsheet not seen: $googleSpreadsheetId"))
-
-  private def jobIdOf(spreadsheetId: Long, sheetName: String): Option[Long] =
-    etlJobs.filter(col("spreadsheet_id") === spreadsheetId &&
-      col("sheet_name") === sheetName)
-      .select("id").as[Long].collect().headOption
 }

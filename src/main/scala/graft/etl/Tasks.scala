@@ -41,8 +41,9 @@ final class Tasks(
   }
 
   /** Load loop (R29; reference: src/Tasks.php:58-65): filter configured jobs
-    * to those stale or never loaded (R16), then load **in order** — the
-    * cursor is min-based, so skipping is not allowed; any failure aborts.
+    * to those discovered and stale or never loaded (R16), then load **in
+    * order** — the cursor is min-based, so skipping is not allowed; any
+    * failure aborts.
     */
   def loadSomeUpdatedSpreadsheets(): Seq[EtlConfig] = {
     val jobs = meta.filterExtractable(etlConfigs)
@@ -104,11 +105,10 @@ final class Tasks(
       }
     val outNames = Normalize.columnNames(cfg.columnMapping.map(_._1))
 
-    // R19: the hash on record from *before* this load's accounting writes.
-    val oldHash = meta.getJobHash(cfg.googleSpreadsheetId, cfg.sheetName)
-    val jobId = meta.ensureJob(cfg.googleSpreadsheetId, cfg.sheetName, cfg.targetTable)
-    if (!oldHash.contains(grid.hash)) {
-      targets.loadJobRows(cfg.targetTable, jobId, outNames,
+    // R19: the job row carries the hash on record from before this load.
+    val job = meta.ensureJob(cfg.googleSpreadsheetId, cfg.sheetName, cfg.targetTable)
+    if (job.raw_columns_rows_hash != grid.hash) {
+      targets.loadJobRows(cfg.targetTable, job.id, outNames,
         grid.toRows(selectors, cfg.skipRows))
     }
     // R21 idempotent skip falls through to the accounting commit alone.

@@ -84,7 +84,9 @@ class CompactCadenceSpec extends AnyFunSuite {
       "job B's partition must be untouched by A's reload")
 
     // partition pruning is intact after the compact+reload interleaving
-    val jobA = meta.ensureJob(SidA, "Sheet1", "t")
+    val sidA = meta.spreadsheetIdOf(SidA)
+    val jobA = meta.etlJobs.collect()
+      .find(j => j.spreadsheet_id == sidA && j.sheet_name == "Sheet1").get.id
     val scan = targets.read("t").filter(s"_origin_etl_job_id = $jobA")
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") &&

@@ -2,8 +2,20 @@ package graft.etl
 
 import graft.SparkTestSession
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Counts `replace` calls per accounting table. */
+private final class CountingMetaStorage(inner: MetaStorage) extends MetaStorage {
+  val replaces = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+  override def exists(table: String): Boolean = inner.exists(table)
+  override def read(table: String, schema: StructType): DataFrame = inner.read(table, schema)
+  override def replace(table: String, df: DataFrame): Unit = {
+    replaces(table) += 1
+    inner.replace(table, df)
+  }
+}
 
 /** End-to-end: fixture grids → discovery → load → target + accounting
   * contents (SURVEY.md §5.3 item 2).
@@ -45,11 +57,12 @@ class EtlPipelineSpec extends AnyFunSuite {
     case "memory"   => "memory:"
   }
 
-  private def freshWorld(backend: String): (Path, Tasks, MetaStore, TargetStore) = {
+  private def freshWorld(backend: String, wrap: MetaStorage => MetaStorage = identity)
+      : (Path, Tasks, MetaStore, TargetStore) = {
     val dir = Files.createTempDirectory("graft-fixtures")
     val wh = Files.createTempDirectory("graft-wh").toString
     writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-01T12:00:00.000Z", people)
-    val meta = new MetaStore(spark, MetaStorage.forUrl(spark, metaUrl(backend, wh)))
+    val meta = new MetaStore(spark, wrap(MetaStorage.forUrl(spark, metaUrl(backend, wh))))
     val targets = new TargetStore(spark, s"$wh/tables")
     meta.setUpAccounting()
     meta.setUpAccounting() // idempotent (R25)
@@ -134,12 +147,48 @@ class EtlPipelineSpec extends AnyFunSuite {
         SpreadsheetMeta("X1", "2026-02-01T00:00:00Z", "one-renamed"),
         SpreadsheetMeta("X3", "2026-01-03T00:00:00Z", "three")), 200L)
       assert(meta.spreadsheetIdOf("X1") == id1)
+      // new keys get max(id) + rank in google_spreadsheet_id order
+      assert(Seq("X1", "X2", "X3").map(meta.spreadsheetIdOf) == Seq(1L, 2L, 3L))
       val x1 = meta.spreadsheets.filter(_.google_spreadsheet_id == "X1").collect().head
       assert(x1.google_modified == "2026-02-01T00:00:00Z")
       assert(x1.google_spreadsheet_name == "one-renamed" && x1.last_seen == 200L)
       assert(meta.spreadsheets.count() == 3)
       assert(meta.spreadsheets.collect().map(_.id).distinct.length == 3)
       assert(meta.getOldestSeen().contains("X2")) // last_seen=100, tie-broken by id
+    }
+
+    test(s"[$backend] a configured spreadsheet loads on the tick that discovers it") {
+      val (dir, tasks, _, targets) = freshWorld(backend)
+      writeFixture(dir, "b.json", Sid2, "Sheet1", "2026-05-04T00:00:00.000Z", Seq(
+        Seq("Name"), Seq("Zoe")))
+      val zoeCfg = EtlConfig(Sid2, "Sheet1", "zoe", Seq("name" -> Right("Name")))
+      tasks.setConfiguration(Seq(zoeCfg, peopleCfg))
+      // a one-spreadsheet page discovers only the older Sid; Sid2 waits
+      assert(tasks.findSomeUpdatedSpreadsheets(1) == 1)
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(peopleCfg))
+      // the `>=` keyset re-lists the cursor's own spreadsheet, so the next
+      // page needs room for one more to reach Sid2
+      assert(tasks.findSomeUpdatedSpreadsheets(2) == 2)
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(zoeCfg))
+      assert(targets.read("zoe").select("name").collect().map(_.getString(0)).toSeq == Seq("Zoe"))
+    }
+
+    test(s"[$backend] __meta_etl_jobs is replaced twice per new sheet, once per reload, never when idle") {
+      var storage: CountingMetaStorage = null
+      val (dir, tasks, meta, _) = freshWorld(backend, s => { storage = new CountingMetaStorage(s); storage })
+      // one tick: (sheets loaded, __meta_etl_jobs replaces)
+      def tick(): (Int, Int) = {
+        val before = storage.replaces(meta.EtlJobsTable)
+        tasks.findSomeUpdatedSpreadsheets()
+        val loaded = tasks.loadSomeUpdatedSpreadsheets()
+        tasks.verifyOldestSpreadsheet()
+        (loaded.size, storage.replaces(meta.EtlJobsTable) - before)
+      }
+      assert(tick() == ((1, 2))) // new sheet: ensureJob + commitJob
+      assert(tick() == ((0, 0))) // idle
+      // touch only: the hash gate skips the data write; commitJob alone writes
+      writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-02T00:00:00.000Z", people)
+      assert(tick() == ((1, 1)))
     }
 
     test(s"[$backend] verifyOldestSpreadsheet: refresh on success, false when inaccessible (R30)") {
@@ -203,5 +252,50 @@ class EtlPipelineSpec extends AnyFunSuite {
     val metaB = new MetaStore(spark, s"$wh/meta", namingB)
     assert(metaA.spreadsheets.collect().map(_.google_spreadsheet_id).toSeq == Seq(Sid))
     assert(metaB.spreadsheets.collect().map(_.google_spreadsheet_id).toSeq == Seq(Sid2))
+  }
+
+  test("[snapshot] a crash between replace's renames keeps the cursor and job ids") {
+    val dir = Files.createTempDirectory("graft-fixtures")
+    val wh = Files.createTempDirectory("graft-wh").toString
+    writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-01T12:00:00.000Z", people)
+    writeFixture(dir, "b.json", Sid2, "Sheet1", "2026-05-04T00:00:00.000Z", Seq(
+      Seq("Name"), Seq("Zoe")))
+    val zoeCfg = EtlConfig(Sid2, "Sheet1", "renewals_2019", Seq("name" -> Right("Name")))
+    val targets = new TargetStore(spark, s"$wh/tables")
+    def run(): MetaStore = {
+      val meta = new MetaStore(spark, s"$wh/meta")
+      meta.setUpAccounting()
+      val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+      tasks.findSomeUpdatedSpreadsheets()
+      tasks.loadSomeUpdatedSpreadsheets()
+      meta
+    }
+    val meta = run()
+    val cursor = meta.getGreatestModified()
+    val jobs = meta.etlJobs.collect().toSet
+    assert(jobs.map(_.id) == Set(1L, 2L))
+
+    // the crash state: each live table renamed to `.old`, and a complete
+    // but uncommitted `.tmp` snapshot beside it
+    val storage = new SnapshotMetaStorage(spark, s"$wh/meta")
+    for (table <- Seq(meta.SpreadsheetsTable, meta.EtlJobsTable)) {
+      val live = storage.tablePath(table)
+      spark.read.parquet(live).limit(0).repartition(1).write.parquet(s"$live.tmp")
+      Files.move(Paths.get(live), Paths.get(s"$live.old"))
+    }
+    val recovered = new MetaStore(spark, storage)
+    recovered.setUpAccounting()
+    assert(recovered.getGreatestModified() == cursor)
+    assert(recovered.etlJobs.collect().toSet == jobs)
+
+    // Sid2 changes: its reload reuses job id 2 and leaves job 1's partition
+    writeFixture(dir, "b.json", Sid2, "Sheet1", "2026-05-05T00:00:00.000Z", Seq(
+      Seq("Name"), Seq("Yan")))
+    run()
+    val rows = targets.read("renewals_2019")
+      .selectExpr("CAST(_origin_etl_job_id AS BIGINT)", "name")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(rows == Set((1L, "Alice"), (1L, "Bob"), (1L, ""), (2L, "Yan")))
   }
 }

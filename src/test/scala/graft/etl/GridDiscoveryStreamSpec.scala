@@ -97,7 +97,12 @@ class GridDiscoveryStreamSpec extends AnyFunSuite {
     assert(loadedLog.sorted.toSeq == Seq("tgt_a", "tgt_b"))
     assert(targets.read("tgt_a").select("v").collect().map(_.getString(0)).toSeq == Seq("a1"))
     assert(targets.read("tgt_b").select("v").collect().map(_.getString(0)).toSeq == Seq("b1"))
-    val hashA = meta.getJobHash(SidA, "s1")
+    def hashOfA: Option[String] = {
+      val sidA = meta.spreadsheetIdOf(SidA)
+      meta.etlJobs.collect().find(j => j.spreadsheet_id == sidA && j.sheet_name == "s1")
+        .map(_.raw_columns_rows_hash).filter(_.nonEmpty)
+    }
+    val hashA = hashOfA
     assert(hashA.isDefined)
 
     // mutate B (new cell, bumped modifiedTime) + a brand-new spreadsheet C
@@ -111,7 +116,7 @@ class GridDiscoveryStreamSpec extends AnyFunSuite {
     // partition overwrite replaced B's rows — no duplicate from redelivery
     assert(targets.read("tgt_b").select("v").collect().map(_.getString(0)).toSeq == Seq("b2"))
     assert(targets.read("tgt_c").select("v").collect().map(_.getString(0)).toSeq == Seq("c1"))
-    assert(meta.getJobHash(SidA, "s1") == hashA) // A's accounting untouched
+    assert(hashOfA == hashA) // A's accounting untouched
 
     // restart with nothing new: zero batches, zero loads
     loadedLog.clear()
