@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.collection.mutable
 
 /** `__meta_spreadsheets` row (SURVEY.md §1.1.2; reference:
   * src/DatabaseAgentMysql.php:98-106). `google_modified` is an RFC 3339
@@ -35,10 +36,11 @@ final case class EtlJobRow(
   * [[MetaStorage]] trait (R27), so the same semantics run on any backend.
   *
   * Ordering invariant (SURVEY.md §7.4; the reference's "no partial effect"
-  * contract, src/DatabaseAgent.php:136-142): per sheet, a new job row is
-  * durable before its first data write ([[ensureJob]]), and the hash and
-  * `google_modified` commit only after the data ([[commitJob]]). A crash in
-  * between leaves a stale hash, so the next run redoes an idempotent reload.
+  * contract, src/DatabaseAgent.php:136-142), per load phase
+  * ([[loadStale]]): every job row the phase needs is durable before its
+  * first data write, and the hashes and `google_modified` commit only after
+  * its last. A crash in between leaves stale hashes, so the next run redoes
+  * idempotent reloads into the same job partitions.
   */
 final class MetaStore(spark: SparkSession, storage: MetaStorage) {
   import spark.implicits._
@@ -124,64 +126,54 @@ final class MetaStore(spark: SparkSession, storage: MetaStorage) {
   def setSpreadsheetSeen(meta: SpreadsheetMeta, lastSeen: Long): Unit =
     setSpreadsheetsSeen(Seq(meta), lastSeen)
 
-  /** Change filter (R16; reference: src/DatabaseAgentMysql.php:52-87):
-    * keep jobs whose spreadsheet has been discovered and whose
-    * (spreadsheet, sheet) is not already loaded at the current
-    * `google_modified`. A configured spreadsheet beyond the discovery pages
-    * read so far waits for the tick that discovers it; the cursor only
-    * moves forward, so that tick comes.
+  /** One load phase (R16, R19–R20; reference:
+    * src/DatabaseAgentMysql.php:52-87, 198-230) that collects each table once:
+    *  1. keep the configured jobs whose spreadsheet has been discovered and
+    *     whose (spreadsheet, sheet) is not loaded at the current
+    *     `google_modified` (R16); an undiscovered spreadsheet waits for the
+    *     tick that discovers it (the cursor only moves forward);
+    *  2. ensure their job rows in config order — a new one gets `max(id) + 1`,
+    *     a changed `target_table` is re-pointed — and write `__meta_etl_jobs`
+    *     once if any row is new or re-pointed, before the first data write;
+    *  3. `load` each, in order: it gets the row with the hash on record from
+    *     before this load ("" when never loaded) and returns the sheet's hash;
+    *  4. in one more replace, also when a load throws, commit the hash and the
+    *     spreadsheet's `google_modified` of every job that finished.
+    * Returns the kept jobs.
     */
-  def filterExtractable(jobs: Seq[EtlConfig]): Seq[EtlConfig] = {
-    if (jobs.isEmpty) return jobs
-    val byId = spreadsheets.collect().map(s => s.id -> s).toMap
-    val discovered = byId.values.map(_.google_spreadsheet_id).toSet
-    val upToDate = etlJobs.collect().flatMap(j => byId.get(j.spreadsheet_id)
-      .filter(_.google_modified == j.google_modified)
-      .map(s => (s.google_spreadsheet_id, j.sheet_name))).toSet
-    jobs.filter(j => discovered(j.googleSpreadsheetId) &&
-      !upToDate((j.googleSpreadsheetId, j.sheetName)))
-  }
+  def loadStale(configs: Seq[EtlConfig])(load: (EtlConfig, EtlJobRow) => String): Seq[EtlConfig] = {
+    if (configs.isEmpty) return Nil
+    val sheets = spreadsheets.collect()
+    val sidOf = sheets.map(s => s.google_spreadsheet_id -> s.id).toMap
+    val modifiedOf = sheets.map(s => s.id -> s.google_modified).toMap
+    val known = etlJobs.collect().toSeq
+    val upToDate = known.filter(j => modifiedOf.get(j.spreadsheet_id).contains(j.google_modified))
+      .map(j => (j.spreadsheet_id, j.sheet_name)).toSet
+    val stale = configs.filter(c =>
+      sidOf.get(c.googleSpreadsheetId).exists(sid => !upToDate((sid, c.sheetName))))
 
-  /** Ensure the job row exists and return it: its id is the lineage FK,
-    * and its `raw_columns_rows_hash` is the hash on record from before this
-    * load (R19; reference: src/DatabaseAgentMysql.php:198-211), "" when
-    * never loaded. Writes only a new row or a re-pointed `target_table`;
-    * `google_modified` and the hash advance in [[commitJob]], after the
-    * target data is durably written.
-    */
-  def ensureJob(googleSpreadsheetId: String, sheetName: String, targetTable: String): EtlJobRow = {
-    val sid = spreadsheetIdOf(googleSpreadsheetId)
-    val jobs = etlJobs.collect().toSeq
-    jobs.find(j => j.spreadsheet_id == sid && j.sheet_name == sheetName) match {
-      case Some(job) if job.target_table == targetTable => job
-      case Some(job) => // target table may legitimately be re-pointed by config
-        val moved = job.copy(target_table = targetTable)
-        writeJobs(jobs.map(j => if (j.id == job.id) moved else j))
-        moved
-      case None =>
-        val job = EtlJobRow(jobs.map(_.id).maxOption.getOrElse(0L) + 1, sid,
-          sheetName, targetTable, "", "")
-        writeJobs(jobs :+ job)
-        job
+    val rows = mutable.LinkedHashMap.from(known.map(j => (j.spreadsheet_id, j.sheet_name) -> j))
+    var maxId = known.map(_.id).maxOption.getOrElse(0L)
+    val phase = stale.map { c =>
+      val key = (sidOf(c.googleSpreadsheetId), c.sheetName)
+      val job = rows.get(key) match {
+        case Some(j) => j.copy(target_table = c.targetTable)
+        case None => maxId += 1; EtlJobRow(maxId, key._1, key._2, c.targetTable, "", "")
+      }
+      rows(key) = job
+      c -> job
     }
+    if (rows.values.toSeq != known) writeJobs(rows.values.toSeq)
+
+    val hashes = mutable.Map.empty[Long, String]
+    try phase.foreach { case (c, job) => hashes(job.id) = load(c, job) }
+    finally if (hashes.nonEmpty) writeJobs(rows.values.toSeq.map(j => hashes.get(j.id).fold(j)(h =>
+      j.copy(google_modified = modifiedOf(j.spreadsheet_id), raw_columns_rows_hash = h))))
+    stale
   }
 
-  /** Post-load accounting commit (R20 upsert's hash/modified half;
-    * reference: src/DatabaseAgentMysql.php:213-230 — the reference copies
-    * the spreadsheet row's current `google_modified` into the job row).
-    */
-  def commitJob(googleSpreadsheetId: String, sheetName: String, hash: String): Unit = {
-    val sheet = seen(googleSpreadsheetId)
-    writeJobs(etlJobs.collect().toSeq.map(j =>
-      if (j.spreadsheet_id == sheet.id && j.sheet_name == sheetName)
-        j.copy(google_modified = sheet.google_modified, raw_columns_rows_hash = hash)
-      else j))
-  }
-
-  def spreadsheetIdOf(googleSpreadsheetId: String): Long = seen(googleSpreadsheetId).id
-
-  private def seen(googleSpreadsheetId: String): SpreadsheetSeen =
+  def spreadsheetIdOf(googleSpreadsheetId: String): Long =
     spreadsheets.collect().find(_.google_spreadsheet_id == googleSpreadsheetId)
       .getOrElse(throw new NoSuchElementException(
-        s"Spreadsheet not seen: $googleSpreadsheetId"))
+        s"Spreadsheet not seen: $googleSpreadsheetId")).id
 }

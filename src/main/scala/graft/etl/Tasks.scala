@@ -10,6 +10,10 @@ package graft.etl
   * also back the Structured Streaming variant
   * ([[GridDiscoveryProvider]], SURVEY.md §7.5).
   *
+  * Each load is one [[MetaStore.loadStale]] phase, which keeps the §7.4
+  * order across the phase's sheets: job rows are written before the first
+  * data write, and hashes are committed after the last.
+  *
   * `loadTime` is captured once per run and stamps every `last_seen`
   * (reference: src/DatabaseAgent.php:86).
   */
@@ -25,8 +29,18 @@ final class Tasks(
   private var etlConfigs: Seq[EtlConfig] = Nil
 
   def loadConfiguration(path: String): Unit = setConfiguration(EtlConfig.fromFile(path))
-  def setConfiguration(configs: Seq[EtlConfig]): Unit = etlConfigs = configs
   def configuration: Seq[EtlConfig] = etlConfigs
+
+  /** Rejects two entries for one (spreadsheet, sheet): `__meta_etl_jobs` is
+    * unique on that key, so one sheet feeds one target.
+    */
+  def setConfiguration(configs: Seq[EtlConfig]): Unit = {
+    val keys = configs.map(c => (c.googleSpreadsheetId, c.sheetName))
+    keys.diff(keys.distinct).headOption.foreach { case (id, sheet) =>
+      throw new EtlConfigException(s"Two config entries for spreadsheet $id sheet $sheet")
+    }
+    etlConfigs = configs
+  }
 
   /** Discovery micro-batch (R28; reference: src/Tasks.php:34-56): read the
     * persisted cursor, list ≤`count` spreadsheets from it (keyset `>=` +
@@ -43,13 +57,9 @@ final class Tasks(
   /** Load loop (R29; reference: src/Tasks.php:58-65): filter configured jobs
     * to those discovered and stale or never loaded (R16), then load **in
     * order** — the cursor is min-based, so skipping is not allowed; any
-    * failure aborts.
+    * failure aborts, after the sheets before it are committed.
     */
-  def loadSomeUpdatedSpreadsheets(): Seq[EtlConfig] = {
-    val jobs = meta.filterExtractable(etlConfigs)
-    jobs.foreach(loadSheet)
-    jobs
-  }
+  def loadSomeUpdatedSpreadsheets(): Seq[EtlConfig] = meta.loadStale(etlConfigs)(loadSheet)
 
   /** Streaming micro-batch composite — the `foreachBatch` body of the
     * streaming discovery mode ([[GridDiscoveryProvider]], EtlMain
@@ -65,10 +75,7 @@ final class Tasks(
     else {
       meta.setSpreadsheetsSeen(seen, loadTime)
       val ids = seen.map(_.id).toSet
-      val jobs = meta.filterExtractable(
-        etlConfigs.filter(c => ids(c.googleSpreadsheetId)))
-      jobs.foreach(loadSheet)
-      jobs
+      meta.loadStale(etlConfigs.filter(c => ids(c.googleSpreadsheetId)))(loadSheet)
     }
 
   /** Access audit (R30; reference: src/Tasks.php:67-98): re-verify the
@@ -88,12 +95,10 @@ final class Tasks(
   /** Per-sheet ETL composite (R31; reference: src/Tasks.php:100-143):
     * extract grid → resolve headers (errors wrapped with the spreadsheet
     * URL, reference :116-123) → normalize output names → hash-skip or
-    * project/skip/pad → partition-overwrite load → accounting commit last
-    * (§7.4 ordering: a crash after the data write and before the commit
-    * leaves a stale hash, and the next run simply redoes the idempotent
-    * reload).
+    * project/skip/pad → partition-overwrite load into `job`'s partition.
+    * Returns the grid hash for the phase's accounting commit.
     */
-  def loadSheet(cfg: EtlConfig): Unit = {
+  private def loadSheet(cfg: EtlConfig, job: EtlJobRow): String = {
     val grid = source.grid(cfg.googleSpreadsheetId, cfg.sheetName)
     val selectors =
       try grid.columnSelectorsFromHeaderRow(cfg.columnMapping.map(_._2), cfg.headerRow)
@@ -105,13 +110,11 @@ final class Tasks(
       }
     val outNames = Normalize.columnNames(cfg.columnMapping.map(_._1))
 
-    // R19: the job row carries the hash on record from before this load.
-    val job = meta.ensureJob(cfg.googleSpreadsheetId, cfg.sheetName, cfg.targetTable)
+    // R19/R21: the job row carries the hash on record from before this load.
     if (job.raw_columns_rows_hash != grid.hash) {
       targets.loadJobRows(cfg.targetTable, job.id, outNames,
         grid.toRows(selectors, cfg.skipRows))
     }
-    // R21 idempotent skip falls through to the accounting commit alone.
-    meta.commitJob(cfg.googleSpreadsheetId, cfg.sheetName, grid.hash)
+    grid.hash
   }
 }

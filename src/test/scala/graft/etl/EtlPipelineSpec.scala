@@ -6,13 +6,33 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Counts `replace` calls per accounting table. */
+/** Counts `read` and `replace` calls per accounting table. */
 private final class CountingMetaStorage(inner: MetaStorage) extends MetaStorage {
+  val reads = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
   val replaces = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+  override def exists(table: String): Boolean = inner.exists(table)
+  override def read(table: String, schema: StructType): DataFrame = {
+    reads(table) += 1
+    inner.read(table, schema)
+  }
+  override def replace(table: String, df: DataFrame): Unit = {
+    replaces(table) += 1
+    inner.replace(table, df)
+  }
+}
+
+/** Stands in for a process crash: once `jobReplacesLeft` reaches 0, a
+  * `__meta_etl_jobs` replace throws before it writes anything.
+  */
+private final class CrashingMetaStorage(inner: MetaStorage) extends MetaStorage {
+  var jobReplacesLeft = Int.MaxValue
   override def exists(table: String): Boolean = inner.exists(table)
   override def read(table: String, schema: StructType): DataFrame = inner.read(table, schema)
   override def replace(table: String, df: DataFrame): Unit = {
-    replaces(table) += 1
+    if (table == "__meta_etl_jobs") {
+      if (jobReplacesLeft == 0) throw new IllegalStateException("crash at __meta_etl_jobs replace")
+      jobReplacesLeft -= 1
+    }
     inner.replace(table, df)
   }
 }
@@ -32,6 +52,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   private val Sid = "1b33RL2nQJxdaHYxVmkk4lo3K1IKjSD3_ggnokrZCkx8"
   private val Sid2 = "2c44SM3oRKyebIZyWnll5mp4L2JLkTE4_hhopsaDlY99"
+  private val Sid3 = "3d55TN4pSLzfcJaZWomm6nq5M3KMmUF5_iipqtbEmZ00"
 
   private def writeFixture(dir: Path, file: String, id: String, sheet: String,
       modified: String, values: Seq[Seq[String]]): Unit = {
@@ -51,6 +72,12 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   private val peopleCfg = EtlConfig(Sid, "2019 Expirations", "renewals_2019",
     Seq("name" -> Right("Name"), "email" -> Right("Émail Address"), "flag" -> Left(3)))
+
+  private val zoeCfg = EtlConfig(Sid2, "Sheet1", "zoe", Seq("name" -> Right("Name")))
+
+  private def writeZoe(dir: Path, modified: String = "2026-05-04T00:00:00.000Z",
+      name: String = "Zoe"): Unit =
+    writeFixture(dir, "b.json", Sid2, "Sheet1", modified, Seq(Seq("Name"), Seq(name)))
 
   private def metaUrl(backend: String, wh: String): String = backend match {
     case "snapshot" => s"parquet:$wh/meta"
@@ -99,7 +126,7 @@ class EtlPipelineSpec extends AnyFunSuite {
       tasks.findSomeUpdatedSpreadsheets()
       tasks.loadSomeUpdatedSpreadsheets()
 
-      // up-to-date ⇒ filterExtractable drops the job
+      // up-to-date ⇒ the R16 filter drops the job
       assert(tasks.loadSomeUpdatedSpreadsheets().isEmpty)
 
       // bump modifiedTime but keep content ⇒ job re-runs, hash-skips the write
@@ -159,9 +186,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
     test(s"[$backend] a configured spreadsheet loads on the tick that discovers it") {
       val (dir, tasks, _, targets) = freshWorld(backend)
-      writeFixture(dir, "b.json", Sid2, "Sheet1", "2026-05-04T00:00:00.000Z", Seq(
-        Seq("Name"), Seq("Zoe")))
-      val zoeCfg = EtlConfig(Sid2, "Sheet1", "zoe", Seq("name" -> Right("Name")))
+      writeZoe(dir)
       tasks.setConfiguration(Seq(zoeCfg, peopleCfg))
       // a one-spreadsheet page discovers only the older Sid; Sid2 waits
       assert(tasks.findSomeUpdatedSpreadsheets(1) == 1)
@@ -173,7 +198,7 @@ class EtlPipelineSpec extends AnyFunSuite {
       assert(targets.read("zoe").select("name").collect().map(_.getString(0)).toSeq == Seq("Zoe"))
     }
 
-    test(s"[$backend] __meta_etl_jobs is replaced twice per new sheet, once per reload, never when idle") {
+    test(s"[$backend] __meta_etl_jobs replaces per tick: 2 cold, 1 reload, 0 idle") {
       var storage: CountingMetaStorage = null
       val (dir, tasks, meta, _) = freshWorld(backend, s => { storage = new CountingMetaStorage(s); storage })
       // one tick: (sheets loaded, __meta_etl_jobs replaces)
@@ -184,11 +209,89 @@ class EtlPipelineSpec extends AnyFunSuite {
         tasks.verifyOldestSpreadsheet()
         (loaded.size, storage.replaces(meta.EtlJobsTable) - before)
       }
-      assert(tick() == ((1, 2))) // new sheet: ensureJob + commitJob
+      assert(tick() == ((1, 2))) // new sheet: job row before the load + commit after
       assert(tick() == ((0, 0))) // idle
-      // touch only: the hash gate skips the data write; commitJob alone writes
+      // touch only: the hash gate skips the data write; the commit alone writes
       writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-02T00:00:00.000Z", people)
       assert(tick() == ((1, 1)))
+    }
+
+    test(s"[$backend] a load phase reads each accounting table once, commits once") {
+      var storage: CountingMetaStorage = null
+      val (dir, tasks, meta, _) = freshWorld(backend, s => { storage = new CountingMetaStorage(s); storage })
+      writeZoe(dir)
+      writeFixture(dir, "c.json", Sid3, "Sheet1", "2026-05-05T00:00:00.000Z", Seq(Seq("Name"), Seq("Yan")))
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg,
+        EtlConfig(Sid3, "Sheet1", "yan", Seq("name" -> Right("Name")))))
+      val tables = Seq(meta.SpreadsheetsTable, meta.EtlJobsTable)
+      // one tick: (sheets loaded, load-phase reads per table, load-phase
+      // __meta_etl_jobs replaces)
+      def tick(): (Int, Seq[Int], Int) = {
+        tasks.findSomeUpdatedSpreadsheets()
+        val reads = tables.map(storage.reads)
+        val replaces = storage.replaces(meta.EtlJobsTable)
+        val loaded = tasks.loadSomeUpdatedSpreadsheets()
+        (loaded.size, tables.map(storage.reads).zip(reads).map { case (a, b) => a - b },
+          storage.replaces(meta.EtlJobsTable) - replaces)
+      }
+      assert(tick() == ((3, Seq(1, 1), 2))) // cold: job rows, then one commit
+      writeZoe(dir, "2026-05-06T00:00:00.000Z", "Zed")
+      writeFixture(dir, "c.json", Sid3, "Sheet1", "2026-05-06T00:00:00.000Z", Seq(Seq("Name"), Seq("Yul")))
+      assert(tick() == ((2, Seq(1, 1), 1))) // two reloads: one commit
+      assert(tick() == ((0, Seq(1, 1), 0))) // idle
+    }
+
+    test(s"[$backend] a load that throws part way commits the sheets before it") {
+      val (dir, tasks, meta, targets) = freshWorld(backend)
+      writeZoe(dir)
+      tasks.setConfiguration(Seq(peopleCfg,
+        zoeCfg.copy(columnMapping = Seq("name" -> Right("Nope")))))
+      tasks.findSomeUpdatedSpreadsheets()
+      val e = intercept[IllegalArgumentException] { tasks.loadSomeUpdatedSpreadsheets() }
+      assert(e.getMessage.contains("Required column not found: Nope"))
+      assert(e.getMessage.contains(s"https://docs.google.com/spreadsheets/d/$Sid2"))
+      val bySheet = meta.etlJobs.collect().map(j => j.sheet_name -> j).toMap
+      val people = bySheet("2019 Expirations")
+      assert(people.raw_columns_rows_hash ==
+        new LocalGridSource(dir.toString).grid(Sid, "2019 Expirations").hash)
+      assert(people.google_modified == "2026-05-01T12:00:00.000Z")
+      assert(bySheet("Sheet1").raw_columns_rows_hash == "") // row written, never committed
+
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+      tasks.findSomeUpdatedSpreadsheets()
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(zoeCfg))
+      assert(targets.read("zoe").select("name").collect().map(_.getString(0)).toSeq == Seq("Zoe"))
+    }
+
+    test(s"[$backend] a crash at the phase commit keeps job ids and stale hashes") {
+      def world(wrap: MetaStorage => MetaStorage): (Tasks, MetaStore, TargetStore) = {
+        val (dir, tasks, meta, targets) = freshWorld(backend, wrap)
+        writeZoe(dir)
+        tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+        tasks.findSomeUpdatedSpreadsheets()
+        (tasks, meta, targets)
+      }
+      def contents(targets: TargetStore) =
+        Seq("renewals_2019", "zoe").map(t => targets.read(t).collect().toSet)
+      val (cleanTasks, _, cleanTargets) = world(identity)
+      cleanTasks.loadSomeUpdatedSpreadsheets()
+      val clean = contents(cleanTargets)
+
+      var storage: CrashingMetaStorage = null
+      val (tasks, meta, targets) = world(s => { storage = new CrashingMetaStorage(s); storage })
+      storage.jobReplacesLeft = 1 // the job-row write passes, the commit crashes
+      intercept[IllegalStateException] { tasks.loadSomeUpdatedSpreadsheets() }
+      assert(contents(targets) == clean) // both loads ran before the commit
+      val jobs = meta.etlJobs.collect()
+      assert(jobs.map(j => j.id -> j.sheet_name).toSet == Set(1L -> "2019 Expirations", 2L -> "Sheet1"))
+      assert(jobs.forall(j => j.google_modified == "" && j.raw_columns_rows_hash == ""))
+
+      // the rerun reloads both sheets into the same job partitions
+      storage.jobReplacesLeft = Int.MaxValue
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(peopleCfg, zoeCfg))
+      assert(meta.etlJobs.collect().map(_.id).toSet == Set(1L, 2L))
+      assert(meta.etlJobs.collect().forall(_.raw_columns_rows_hash.nonEmpty))
+      assert(contents(targets) == clean)
     }
 
     test(s"[$backend] verifyOldestSpreadsheet: refresh on success, false when inaccessible (R30)") {
@@ -209,6 +312,15 @@ class EtlPipelineSpec extends AnyFunSuite {
       assert(e.getMessage.contains("Required column not found: Nope"))
       assert(e.getMessage.contains(s"https://docs.google.com/spreadsheets/d/$Sid"))
     }
+  }
+
+  test("two config entries for one (spreadsheet, sheet) are rejected") {
+    val (_, tasks, _, _) = freshWorld("memory")
+    val e = intercept[EtlConfigException] {
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg, peopleCfg.copy(targetTable = "t2")))
+    }
+    assert(e.getMessage.contains(Sid) && e.getMessage.contains("2019 Expirations"))
+    assert(tasks.configuration == Seq(peopleCfg))
   }
 
   test("R26: two prefixed/schema'd configs share one warehouse root without collision") {
