@@ -366,6 +366,47 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(metaB.spreadsheets.collect().map(_.google_spreadsheet_id).toSeq == Seq(Sid2))
   }
 
+  /** Spark jobs `body` launches, counted under a job group of its own. */
+  private def sparkJobsOf[T](body: => T): (T, Int) = {
+    val group = s"etl-tick-${System.nanoTime()}"
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "ETL tick under test")
+    try {
+      val result = body
+      // listener delivery is async — poll until the count is stable
+      var last = -1
+      var spins = 0
+      while (jobs != last && spins < 50) { last = jobs; Thread.sleep(100); spins += 1 }
+      (result, jobs)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("[snapshot] accounting launches no Spark job: an idle tick runs none") {
+    val (dir, tasks, meta, _) = freshWorld("snapshot")
+    writeZoe(dir)
+    tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+    // one tick as EtlMain runs it; returns the sheets loaded
+    def tick(): Int = {
+      meta.setUpAccounting()
+      tasks.findSomeUpdatedSpreadsheets()
+      val loaded = tasks.loadSomeUpdatedSpreadsheets()
+      tasks.verifyOldestSpreadsheet()
+      loaded.size
+    }
+    val (loaded, coldJobs) = sparkJobsOf(tick())
+    assert(loaded == 2)
+    assert(coldJobs <= loaded, s"cold tick launched $coldJobs jobs for $loaded sheets")
+    assert(sparkJobsOf(tick()) == ((0, 0)))
+  }
+
   test("[snapshot] a crash between replace's renames keeps the cursor and job ids") {
     val dir = Files.createTempDirectory("graft-fixtures")
     val wh = Files.createTempDirectory("graft-wh").toString
