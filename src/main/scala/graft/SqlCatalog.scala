@@ -126,40 +126,7 @@ object SqlCatalog {
     * which bucket-prunes through the view (spec-pinned mechanism).
     */
   def bm25Sql(qview: String): String =
-    s"""WITH ${bm25ScoreCtes(qview)}
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, score_u FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM sc)
-       |WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}""".stripMargin
-
-  /** The shared query-terms → scored-candidates CTE chain (ending in
-    * `sc`, scored but UNCUT) — one scoring text for [[bm25Sql]] and
-    * [[diverseSql]], which must suppress duplicates BEFORE the rank cut
-    * (cutting first could only shrink the page, never backfill it).
-    */
-  private def bm25ScoreCtes(qview: String): String =
-    bm25ScoreCtes(qview, "graft_lex_postings")
-
-  /** The same chain with the candidate view swappable — [[impactSql]]
-    * redirects it to the impact sidecar, everything else identical.
-    */
-  private def bm25ScoreCtes(qview: String, postView: String): String =
-    s"""qt0 AS (SELECT qid, term, COUNT(*) AS qtf
-       |  FROM (SELECT qid, explode(split(lower(trim(qtext)), '\\\\s+')) AS term
-       |        FROM $qview)
-       |  GROUP BY qid, term),
-       |qt AS (SELECT qid, term FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY qtf DESC, term) AS rn FROM qt0)
-       |  WHERE rn <= ${queries.TextAnalysis.Bm25QTermCap}),
-       |sc AS (SELECT qt.qid, p.doc_id,
-       |  SUM(((2*s.n - 2*f.df + 1) * 1000 div (2*f.df + 1))
-       |    * ((2200 * s.a * p.tf) div (10 * s.a * p.tf + 3 * s.a + 9 * d.dl)))
-       |    AS score_u
-       |  FROM $postView p JOIN qt USING (term)
-       |    JOIN graft_lex_df f USING (term)
-       |    JOIN graft_lex_doclen d USING (doc_id), graft_lex_stats s
-       |  GROUP BY 1, 2)""".stripMargin
+    lexPageSql(qview, "graft_lex_postings")
 
   /** The impact-ordered APPROXIMATE BM25 serve as one SQL statement —
     * q182's contract for the catalog road: [[bm25Sql]]'s text with the
@@ -170,11 +137,58 @@ object SqlCatalog {
     * queries (RetrievalSpec pins the three-road identity with q182).
     */
   def impactSql(qview: String): String =
-    s"""WITH ${bm25ScoreCtes(qview, "graft_lex_impact")}
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, score_u FROM
+    lexPageSql(qview, "graft_lex_impact")
+
+  /** The one body of [[bm25Sql]] and [[impactSql]]. */
+  private def lexPageSql(qview: String, postView: String): String =
+    s"""WITH ${bm25ScoreCtes(qview, postView)}
+       |${topPerQidSql(PageCols, "sc", queries.TextAnalysis.Bm25TopK)}""".stripMargin
+
+  /** [[functions.TextFunctions.idfM]] as SQL text over column references. */
+  private[graft] def idfMSql(df: String, n: String): String =
+    s"(2*$n - 2*$df + 1) * 1000 div (2*$df + 1)"
+
+  /** [[functions.TextFunctions.termScore]] as SQL text over column references. */
+  private[graft] def termScoreSql(tf: String, dl: String, a: String): String =
+    s"(2200 * $a * $tf) div (10 * $a * $tf + 3 * $a + 9 * $dl)"
+
+  /** [[queries.TextAnalysis.topPerQid]] as SQL text: `cols` (with
+    * `rnk` in scope) of `from`'s first `k` rows per qid by `score`.
+    */
+  private def topPerQidSql(cols: String, from: String, k: Long,
+      score: String = "score_u"): String =
+    s"""SELECT $cols FROM
        |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM sc)
-       |WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}""".stripMargin
+       |     ORDER BY $score DESC, doc_id) AS rnk FROM $from) r
+       |WHERE rnk <= $k""".stripMargin
+
+  /** The ranked-page projection of the BM25 statements. */
+  private val PageCols = "qid, CAST(rnk AS BIGINT) AS rnk, doc_id, score_u"
+
+  /** The shared query-terms → scored-candidates CTE chain (ending in
+    * `sc`, scored but UNCUT) over the candidate view `postView` — one
+    * scoring text for every lexical statement; [[diverseSql]] must
+    * suppress duplicates BEFORE the rank cut (cutting first could only
+    * shrink the page, never backfill it).
+    */
+  private def bm25ScoreCtes(qview: String,
+      postView: String = "graft_lex_postings"): String =
+    s"""qt0 AS (SELECT qid, term, COUNT(*) AS qtf
+       |  FROM (SELECT qid, explode(split(lower(trim(qtext)), '\\\\s+')) AS term
+       |        FROM $qview)
+       |  GROUP BY qid, term),
+       |qt AS (SELECT qid, term FROM
+       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+       |     ORDER BY qtf DESC, term) AS rn FROM qt0)
+       |  WHERE rn <= ${queries.TextAnalysis.Bm25QTermCap}),
+       |sc AS (SELECT qt.qid, p.doc_id,
+       |  SUM((${idfMSql("f.df", "s.n")})
+       |    * (${termScoreSql("p.tf", "d.dl", "s.a")}))
+       |    AS score_u
+       |  FROM $postView p JOIN qt USING (term)
+       |    JOIN graft_lex_df f USING (term)
+       |    JOIN graft_lex_doclen d USING (doc_id), graft_lex_stats s
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** The pseudo-relevance-feedback expansion serve as ONE SQL statement
     * — q178's contract for the catalog road: [[bm25Sql]]'s scoring over
@@ -196,10 +210,8 @@ object SqlCatalog {
     */
   def prfSql(qview: String): String =
     s"""WITH ${bm25ScoreCtes(qview)},
-       |serve1 AS (SELECT qid, doc_id FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM sc) r
-       |  WHERE rnk <= ${queries.TextAnalysis.PrfFbDocs}),
+       |serve1 AS (${topPerQidSql("qid, doc_id", "sc",
+             queries.TextAnalysis.PrfFbDocs)}),
        |fbt AS (SELECT s1.qid, p.term, SUM(p.tf) AS fw0
        |  FROM serve1 s1 JOIN graft_lex_postings p USING (doc_id)
        |  GROUP BY s1.qid, p.term),
@@ -209,31 +221,27 @@ object SqlCatalog {
        |   FROM fbt f WHERE NOT EXISTS (SELECT 1 FROM qt
        |     WHERE qt.qid = f.qid AND qt.term = f.term)) z
        |  WHERE crn <= ${queries.TextAnalysis.PrfCandCap}),
-       |expw AS (SELECT expc.qid, expc.term,
-       |  (2*s.n - 2*f.df + 1) * 1000 div (2*f.df + 1) AS idf_m,
-       |  expc.fw0 * ((2*s.n - 2*f.df + 1) * 1000 div (2*f.df + 1)) AS ew
+       |expw AS (SELECT expc.qid, expc.term, expc.fw0,
+       |  ${idfMSql("f.df", "s.n")} AS idf_m
        |  FROM expc JOIN graft_lex_df f USING (term), graft_lex_stats s),
        |expt AS (SELECT qid, term, idf_m,
        |    CAST(${queries.TextAnalysis.PrfExpW} AS BIGINT) AS w FROM
        |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY ew DESC, term) AS ern FROM expw) z
+       |     ORDER BY fw0 * idf_m DESC, term) AS ern FROM expw) z
        |  WHERE ern <= ${queries.TextAnalysis.PrfExpTerms}),
        |origt AS (SELECT qt.qid, qt.term,
-       |  (2*s.n - 2*f.df + 1) * 1000 div (2*f.df + 1) AS idf_m,
+       |  ${idfMSql("f.df", "s.n")} AS idf_m,
        |  CAST(${queries.TextAnalysis.PrfOrigW} AS BIGINT) AS w
        |  FROM qt JOIN graft_lex_df f USING (term), graft_lex_stats s),
        |qt2 AS (SELECT * FROM origt UNION ALL SELECT * FROM expt),
        |sc2 AS (SELECT qt2.qid, p.doc_id,
        |  SUM(qt2.w * qt2.idf_m
-       |    * ((2200 * s.a * p.tf) div (10 * s.a * p.tf + 3 * s.a + 9 * d.dl)))
+       |    * (${termScoreSql("p.tf", "d.dl", "s.a")}))
        |    AS score_u
        |  FROM graft_lex_postings p JOIN qt2 USING (term)
        |    JOIN graft_lex_doclen d USING (doc_id), graft_lex_stats s
        |  GROUP BY 1, 2)
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, score_u FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM sc2) r
-       |WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}""".stripMargin
+       |${topPerQidSql(PageCols, "sc2", queries.TextAnalysis.Bm25TopK)}""".stripMargin
 
   /** The L1→L2 feature re-rank as ONE SQL statement — q181's contract
     * for the catalog road: [[bm25Sql]]'s page over `qview`, then the
@@ -247,10 +255,8 @@ object SqlCatalog {
     */
   def rerankSql(qview: String): String =
     s"""WITH ${bm25ScoreCtes(qview)},
-       |page AS (SELECT qid, doc_id, score_u FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM sc) r
-       |  WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}),
+       |page AS (${topPerQidSql("qid, doc_id, score_u", "sc",
+             queries.TextAnalysis.Bm25TopK)}),
        |qpv AS (SELECT qid, split(lower(trim(qtext)), '\\\\s+') AS tk
        |  FROM $qview),
        |qpx AS (SELECT qid, element_at(tk, 1) AS t1, element_at(tk, 2) AS t2
@@ -279,10 +285,8 @@ object SqlCatalog {
        |   ${queries.TextAnalysis.RerankProxBoostPm} *
        |     least(prox_tf, ${queries.TextAnalysis.RerankFeatCap}))
        |  AS final_u FROM fx)
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, score_u,
-       |  phrase_tf, prox_tf, final_u FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY final_u DESC, doc_id) AS rnk FROM rr) r""".stripMargin
+       |${topPerQidSql(s"$PageCols, phrase_tf, prox_tf, final_u", "rr",
+             queries.TextAnalysis.Bm25TopK, "final_u")}""".stripMargin
 
   /** The near-dup-DIVERSIFIED lexical serve as ONE SQL statement —
     * q164's contract for the catalog road: [[bm25Sql]]'s scoring over
@@ -301,11 +305,8 @@ object SqlCatalog {
        |dp AS (SELECT qid, doc_id, cluster_id, score_u FROM
        |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid, cluster_id
        |     ORDER BY score_u DESC, doc_id) AS pr FROM dj) z WHERE pr = 1)
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, cluster_id,
-       |  score_u FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY score_u DESC, doc_id) AS rnk FROM dp) r
-       |WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}""".stripMargin
+       |${topPerQidSql("qid, CAST(rnk AS BIGINT) AS rnk, doc_id, cluster_id, score_u",
+             "dp", queries.TextAnalysis.Bm25TopK)}""".stripMargin
 
   /** The (application, dir) pairs whose views are live — the state
     * [[refreshAfterTakedown]] consults so a takedown against a dir that
@@ -409,21 +410,18 @@ object SqlCatalog {
 
   private def hybridSqlFrom(lexSql: String, qview: String): String =
     s"""WITH lex AS ($lexSql),
-       |sem AS (${adcSql(qview)})
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, rrf_u,
-       |  lex_rnk, sem_rnk FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY rrf_u DESC, doc_id) AS rnk FROM
-       |    (SELECT COALESCE(l.qid, s.qid) AS qid,
-       |       COALESCE(l.doc_id, s.vec_id) AS doc_id,
-       |       COALESCE(${queries.Similarity.RrfScale}
-       |           div (${queries.Similarity.RrfK} + l.rnk), 0) +
-       |       COALESCE(${queries.Similarity.RrfScale}
-       |           div (${queries.Similarity.RrfK} + s.rnk), 0) AS rrf_u,
-       |       l.rnk AS lex_rnk, s.rnk AS sem_rnk
-       |     FROM lex l FULL OUTER JOIN sem s
-       |       ON s.qid = l.qid AND s.vec_id = l.doc_id) f) r
-       |WHERE rnk <= ${queries.Similarity.RrfTopK}""".stripMargin
+       |sem AS (${adcSql(qview)}),
+       |fused AS (SELECT COALESCE(l.qid, s.qid) AS qid,
+       |    COALESCE(l.doc_id, s.vec_id) AS doc_id,
+       |    COALESCE(${queries.Similarity.RrfScale}
+       |        div (${queries.Similarity.RrfK} + l.rnk), 0) +
+       |    COALESCE(${queries.Similarity.RrfScale}
+       |        div (${queries.Similarity.RrfK} + s.rnk), 0) AS rrf_u,
+       |    l.rnk AS lex_rnk, s.rnk AS sem_rnk
+       |  FROM lex l FULL OUTER JOIN sem s
+       |    ON s.qid = l.qid AND s.vec_id = l.doc_id)
+       |${topPerQidSql("qid, CAST(rnk AS BIGINT) AS rnk, doc_id, rrf_u, lex_rnk, sem_rnk",
+             "fused", queries.Similarity.RrfTopK, "rrf_u")}""".stripMargin
 
   /** The positional serve family as complete SQL statements over
     * `graft_lex_pos` — [[bm25Sql]]'s contract for quoted/slop queries:
@@ -478,10 +476,8 @@ object SqlCatalog {
        |  FROM graft_lex_pos p1 JOIN qp ON p1.term = qp.t1
        |  $matchJoins
        |  GROUP BY qp.qid, p1.doc_id)
-       |SELECT qid, CAST(rnk AS BIGINT) AS rnk, doc_id, $cnt$extraCols FROM
-       |  (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-       |     ORDER BY $cnt DESC, doc_id) AS rnk FROM m) r
-       |WHERE rnk <= ${queries.TextAnalysis.Bm25TopK}""".stripMargin
+       |${topPerQidSql(s"qid, CAST(rnk AS BIGINT) AS rnk, doc_id, $cnt$extraCols",
+             "m", queries.TextAnalysis.Bm25TopK, cnt)}""".stripMargin
   }
 
   /** Publish the catalog views for `dir`; returns the view names. */
@@ -592,7 +588,7 @@ object SqlCatalog {
     // L div max(1, N)) — one broadcastable row, so [[bm25Sql]] needs
     // no documents scan. Takedown deltas are already folded in by
     // [[queries.TextAnalysis.lexRead]].
-    Seq((n, l, math.max(1L, l / math.max(1L, n))))
+    Seq((n, l, functions.TextFunctions.quantizedAvgDl(n, l)))
       .toDF("n", "l", "a").createOrReplaceTempView("graft_lex_stats")
   }
 }

@@ -23,8 +23,11 @@ final class Tasks(
     targets: TargetStore,
     val loadTime: Long = System.currentTimeMillis() / 1000) {
 
-  /** Default cursor epoch (reference: src/Tasks.php:36-41). */
-  val defaultCursor: (String, String) = ("2001-01-01T00:00:00Z", "")
+  /** Default cursor epoch (reference: src/Tasks.php:36-41) — the
+    * discovery stream's [[CursorOffset.Epoch]].
+    */
+  val defaultCursor: (String, String) =
+    (CursorOffset.Epoch.modifiedTime, CursorOffset.Epoch.id)
 
   private var etlConfigs: Seq[EtlConfig] = Nil
 

@@ -73,6 +73,54 @@ object TextFunctions {
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
+  /** The lexical family's BM25 kernel — the ONE Column statement of the
+    * scoring arithmetic every Spark road calls (batch, appended, impact
+    * and stream serves; the stream standing-query scorer); the catalog
+    * SQL states the same fragments once in [[graft.SqlCatalog]], and
+    * the DuckDB oracle re-states it independently.
+    *
+    * Scoring is Okapi BM25 (k1 = 6/5, b = 3/4) under this repo's
+    * integer-exact discipline — no libm log, no float sums, every score
+    * an int64 so the per-term sum is order-independent and cross-engine
+    * hash-exact:
+    *  - idf_m ([[idfM]]): the Robertson–Spärck Jones odds
+    *    (N−df+½)/(df+½) with the log dropped (q46's exact-rational idf
+    *    ordering — monotone in the same direction, rank-equivalent per
+    *    term), doubled to integers (2N−2df+1)/(2df+1) and divided at
+    *    milli scale.
+    *  - tfn_c ([[termScore]]): tf·(k1+1)/(tf + k1(1−b) + k1·b·dl/avgdl)
+    *    with avgdl quantized to whole tokens A = max(1, L div N);
+    *    multiplying through by 10A makes every operand integral —
+    *    (2200·A·tf) div (10·A·tf + 3A + 9·dl) at centi scale.
+    *  - per-term score = idf_m · tfn_c; int64 headroom at the 100 TB
+    *    north star (N ≈ 2·10¹⁰ docs): idf_m ≤ 1.4·10¹³ (df ≥ 1),
+    *    tfn_c ≤ 220, term product ≤ 3·10¹⁵, query sum ≤
+    *    [[graft.queries.TextAnalysis.Bm25QTermCap]]·that ≈ 5·10¹⁶ ≪ 2⁶³.
+    *
+    * Every operand is non-negative, so Spark's truncating `div` (called
+    * as a function — no SQL text, so corpus-derived literals never meet
+    * a parser) equals DuckDB's flooring `//` (Bm25KernelSpec pins both
+    * on hand-computed rows).
+    */
+  def idfM(df: Column, n: Column): Column =
+    call_function("div", (lit(2) * n - lit(2) * df + lit(1)) * lit(1000),
+      lit(2) * df + lit(1))
+
+  /** The centi-scale tf-normalization tfn_c of one (term, document)
+    * posting — see [[idfM]] for the arithmetic. A posting's serve score
+    * is `idf_m · termScore`; since idf is term-constant, termScore alone
+    * is also the posting's IMPACT, the within-term order of the impact
+    * sidecars.
+    */
+  def termScore(tf: Column, dl: Column, a: Column): Column =
+    call_function("div", lit(2200) * a * tf,
+      lit(10) * a * tf + lit(3) * a + lit(9) * dl)
+
+  /** The kernel's quantized average document length A = max(1, L div
+    * N) of an N-document, L-token corpus — the `a` of [[termScore]].
+    */
+  def quantizedAvgDl(n: Long, l: Long): Long = math.max(1L, l / math.max(1L, n))
+
   /** Count of tokens matching a stopword set (language-ID / quality input). */
   def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, t => t.isin(stopwords: _*))).cast("long")

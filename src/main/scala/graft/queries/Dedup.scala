@@ -739,12 +739,10 @@ object Dedup {
     val labels = queries("q150_clusters64")(s, dir)
     val wc = Window.partitionBy("qid", "cluster_id")
       .orderBy(desc("score_u"), asc("doc_id"))
-    val w = Window.partitionBy("qid").orderBy(desc("score_u"), asc("doc_id"))
-    scored.join(labels, Seq("doc_id"))
-      .withColumn("pr", row_number().over(wc)).filter(col("pr") === 1)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= TextAnalysis.Bm25TopK)
-      .select("qid", "rnk", "doc_id", "cluster_id", "score_u")
+    TextAnalysis.topPerQid(scored.join(labels, Seq("doc_id"))
+        .withColumn("pr", row_number().over(wc)).filter(col("pr") === 1),
+      "score_u", TextAnalysis.Bm25TopK,
+      "qid", "rnk", "doc_id", "cluster_id", "score_u")
   }
 
   /** External-query diversified serve — q164 for a literal (qid BIGINT,

@@ -875,16 +875,12 @@ object Similarity {
     * per contributing list (a doc only one modality surfaces still
     * scores), every reciprocal an exact int64.
     */
-  private[queries] def rrfFuse(lex: DataFrame, sem: DataFrame): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("rrf_u"), asc("doc_id"))
-    lex.join(sem, Seq("qid", "doc_id"), "full_outer")
-      .withColumn("rrf_u",
-        coalesce(expr(s"$RrfScale div (${RrfK}L + lex_rnk)"), lit(0L)) +
-        coalesce(expr(s"$RrfScale div (${RrfK}L + sem_rnk)"), lit(0L)))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= RrfTopK)
-      .select("qid", "rnk", "doc_id", "rrf_u", "lex_rnk", "sem_rnk")
-  }
+  private[queries] def rrfFuse(lex: DataFrame, sem: DataFrame): DataFrame =
+    TextAnalysis.topPerQid(lex.join(sem, Seq("qid", "doc_id"), "full_outer")
+        .withColumn("rrf_u",
+          coalesce(expr(s"$RrfScale div (${RrfK}L + lex_rnk)"), lit(0L)) +
+          coalesce(expr(s"$RrfScale div (${RrfK}L + sem_rnk)"), lit(0L))),
+      "rrf_u", RrfTopK, "qid", "rnk", "doc_id", "rrf_u", "lex_rnk", "sem_rnk")
 
   /** The EXTERNAL-query hybrid serve — q149 for a literal (qid BIGINT,
     * qtext STRING, qvec ARRAY<FLOAT|DOUBLE>) relation: the production
@@ -1897,17 +1893,21 @@ object Similarity {
       // union, so it builds on a second driver thread while
       // bm25AndPrfPages runs its own bounded collects (r22, guide §2.6
       // — one member's driver actions back-fill the other's stage
-      // tails). Audited: the construction paths only READ session
-      // registries, the ensure* stagings are per-name locked
-      // (Bucketing.withStageLock), and every memo is a computeIfAbsent.
-      // The members' rows are byte-identical to sequential construction
-      // — nothing about WHAT is computed changes, only WHEN.
+      // tails). Its stagings (the IVF-PQ index, and the query sample
+      // the bm25 member also stages) are per-name locked
+      // (Bucketing.withStageLock), and the quantizer and sample memos it
+      // fills are computeIfAbsent maps. The member is awaited in a
+      // `finally`, so no job of it runs after this entry returns or
+      // throws (a bm25 failure propagates once the member has finished).
       val rocchioF = scala.concurrent.Future(
         queries("q179_rocchio_ann")(s, dir))(memberPool)
       // ONE executed q148 statement: the bounded page collects once and
       // feeds BOTH the bm25 row and q178's feedback stage (the q176
       // union-serve fusion, extended across actions — verdict r17 #2)
-      val (bm25Page, prfServe) = TextAnalysis.bm25AndPrfPages(s, dir)
+      val (bm25Page, prfServe) =
+        try TextAnalysis.bm25AndPrfPages(s, dir)
+        finally scala.concurrent.Await.ready(rocchioF,
+          scala.concurrent.duration.Duration.Inf)
       val rocchio = scala.concurrent.Await.result(rocchioF,
         scala.concurrent.duration.Duration.Inf)
       card("bm25", bm25Page, "doc_id")

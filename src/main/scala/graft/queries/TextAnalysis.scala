@@ -56,7 +56,8 @@ object TextAnalysis {
     * query's distinct terms are cut to this many by (query-tf DESC,
     * term ASC) before any corpus-sized work, so the candidate fan-out
     * and the fixed-point score sum are bounded per query at ANY corpus
-    * (and the int64 headroom proof below holds: ≤ cap terms × the
+    * (and the kernel's int64 headroom proof holds — see
+    * [[graft.functions.TextFunctions.idfM]]: ≤ cap terms × the
     * per-term score bound).
     */
   private[graft] val Bm25QTermCap = 16
@@ -669,22 +670,10 @@ object TextAnalysis {
     * q149 fuses it with the ANN serve (q122) — ONE lexical
     * implementation, audited once.
     *
-    * Scoring is Okapi BM25 (k1 = 6/5, b = 3/4) under this repo's
-    * integer-exact discipline — no libm log, no float sums, every score
-    * an int64 so the per-term sum is order-independent and cross-engine
-    * hash-exact:
-    *  - idf_m: the Robertson–Spärck Jones odds (N−df+½)/(df+½) with the
-    *    log dropped (q46's exact-rational idf ordering — monotone in the
-    *    same direction, rank-equivalent per term), doubled to integers
-    *    (2N−2df+1)/(2df+1) and floor-divided at milli scale.
-    *  - tfn_c: tf·(k1+1)/(tf + k1(1−b) + k1·b·dl/avgdl) with avgdl
-    *    quantized to whole tokens A = max(1, L div N); multiplying
-    *    through by 10A makes every operand integral —
-    *    (2200·A·tf) div (10·A·tf + 3A + 9·dl) at centi scale.
-    *  - per-term score = idf_m · tfn_c; int64 headroom at the 100 TB
-    *    north star (N ≈ 2·10¹⁰ docs): idf_m ≤ 1.4·10¹³, tfn_c ≤ 220,
-    *    term product ≤ 3·10¹⁵, query sum ≤ [[Bm25QTermCap]]·that ≈
-    *    5·10¹⁶ ≪ 2⁶³.
+    * Scoring is the lexical family's integer-exact BM25 kernel,
+    * [[graft.functions.TextFunctions.idfM]] ·
+    * [[graft.functions.TextFunctions.termScore]] (the arithmetic and its
+    * int64 headroom are documented there, once).
     *
     * Plan shape (the inverted-index discipline — no corpus-wide sort
     * anywhere): ONE (doc,term) tf build feeds L, per-doc lengths, the
@@ -857,9 +846,8 @@ object TextAnalysis {
       val nOld = oldDocs.count()
       val lOld = Option(s.table(dlT).agg(sum("dl")).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val aOld = math.max(1L, lOld / math.max(1L, nOld))
       val kOld = impactKOf(s, nOld)
-      stageImpactFrom(s, impT, postT, dlT, kOld, aOld)
+      stageImpactFrom(s, impT, postT, dlT, kOld, quantizedAvgDl(nOld, lOld))
       // the growth: every layer appends incrementally
       appendLexIndex(s, postT, dlT, dfT, deltaDocs)
       appendPosIndex(s, posT, deltaDocs)
@@ -867,7 +855,7 @@ object TextAnalysis {
       val lNew = Option(s.table(dlT).agg(sum("dl")).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       appendImpactIndex(s, impT, postT, dlT, deltaDocs,
-        kOld, impactKOf(s, nNew), math.max(1L, lNew / math.max(1L, nNew)))
+        kOld, impactKOf(s, nNew), quantizedAvgDl(nNew, lNew))
       val ss = s
       import ss.implicits._
       // the Bucketing.stage orphan discipline: files left under the
@@ -1126,9 +1114,10 @@ object TextAnalysis {
     bm25StageFor(s, dir, corpusQTexts(s, dir, qids), tomb)
 
   /** The per-query CAPPED term set (qid, term) of a (qid, qtext)
-    * relation — the query side every lexical serve ranks with.
+    * relation — the query side every lexical serve ranks with, batch
+    * and stream ([[graft.streaming.LexStream]] adds its term bucket).
     */
-  private def cappedTerms(qtexts: DataFrame): DataFrame = {
+  private[graft] def cappedTerms(qtexts: DataFrame): DataFrame = {
     val qt0 = queryTermsOf(qtexts)
     val wq = Window.partitionBy("qid").orderBy(desc("qtf"), asc("term"))
     qt0.withColumn("rn", row_number().over(wq))
@@ -1153,35 +1142,23 @@ object TextAnalysis {
 
   private def bm25StageFor(s: SparkSession, dir: String, qtexts: DataFrame,
       tomb: Option[graft.StagedTombstones.DocTomb])
-      : (DataFrame, DataFrame, DataFrame, Long) =
-    bm25StageOver(lexRead(s, dir, tomb), qtexts)
-
-  /** The BM25 staging half over EXPLICIT (masked) index relations —
-    * [[bm25StageFor]]'s body factored for index families staged under
-    * another name (the appended demo family, q187): same capped terms,
-    * same bounded driver read, same literal term-IN prune, same integer
-    * idf fixed point.
-    */
-  private def bm25StageOver(
-      rels: (DataFrame, DataFrame, DataFrame, Long, Long),
-      qtexts: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
-    val (post, dlRel, _, _, _) = rels
-    val (qtIdf, a, terms) = lexQueryStage(rels, qtexts)
-    (post.filter(col("term").isin(terms: _*)), dlRel, qtIdf, a)
+      : (DataFrame, DataFrame, DataFrame, Long) = {
+    val rels = lexRead(s, dir, tomb)
+    lexStageOver(rels._1, rels, qtexts)
   }
 
-  /** The QUERY side every staged lexical serve ranks with — ONE
-    * definition of the capped terms, the bounded driver read that buys
-    * the literal-IN prune, the broadcast df lookup, and the integer
-    * idf fixed point, shared by the exact ([[bm25StageOver]]) and
-    * impact ([[impactStageOver]]) roads so the approximate serve can
-    * never drift from the arithmetic it approximates.
+  /** The BM25 staging half over EXPLICIT (masked) index relations `rels`
+    * — ONE definition of the capped query terms, the bounded driver read
+    * that buys the literal-IN prune of the candidate relation `cands`
+    * (the postings for the exact serve, the impact lists for q182), the
+    * broadcast df lookup and the idf weights, for the staged index and
+    * the appended demo family (q187/q188) alike, so the approximate
+    * serve can never drift from the arithmetic it approximates.
     */
-  private def lexQueryStage(
+  private def lexStageOver(cands: DataFrame,
       rels: (DataFrame, DataFrame, DataFrame, Long, Long),
-      qtexts: DataFrame): (DataFrame, Long, Array[Any]) = {
-    val (_, _, dfRel, n, l) = rels
-    val a = math.max(1L, l / math.max(1L, n))
+      qtexts: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
+    val (_, dlRel, dfRel, n, l) = rels
     // the bounded driver read that buys the prune — collected as the
     // capped (qid, term) PAIRS (≤ |sample|·cap rows by the window cut)
     // rather than just the distinct terms: qt then re-enters the scoring
@@ -1190,44 +1167,59 @@ object TextAnalysis {
     // terms collect and AGAIN inside the main action's qtIdf broadcast
     // (r21; same action count, two fewer exchanges in the serve plan)
     val (qt, terms) = localQTerms(qtexts.sparkSession, qtexts)
-    val dfq = dfRel.filter(col("term").isin(terms: _*))
-    val qtIdf = qt.join(broadcast(dfq), Seq("term"))
-      // all-integer fixed point; operands non-negative so Spark's
-      // truncating `div` and DuckDB's flooring `//` agree
-      .withColumn("idf_m", expr(s"(${2 * n} - 2*df + 1) * 1000 div (2*df + 1)"))
-      .select("qid", "term", "idf_m")
-    (qtIdf, a, terms)
+    (cands.filter(col("term").isin(terms: _*)), dlRel,
+      termWeights(qt, dfRel.filter(col("term").isin(terms: _*)), n),
+      quantizedAvgDl(n, l))
   }
 
-  /** The scored-but-uncut half of the BM25 serve: every candidate
-    * (qid, doc_id, score_u) — bounded by the postings of the queries'
-    * terms, never the corpus. Shared by [[bm25TopDocs]] (which applies
-    * the per-query rank cut) and the diversified serve (q164 in
-    * [[Dedup]]), which must suppress near-dup cluster twins BEFORE the
-    * cut so lower-ranked distinct documents can backfill.
+  /** The (qid, term, idf_m) weights of capped query terms `qt` against
+    * their (term, df) rows in an N-document corpus — the query side of
+    * every lexical serve's score, batch and stream.
     */
-  /** The scoring join over a staged (candidates, dl, qtIdf, a) tuple —
-    * ONE arithmetic for the corpus-sampled and external-query roads.
+  private[graft] def termWeights(qt: DataFrame, dfq: DataFrame,
+      n: Long): DataFrame =
+    qt.join(broadcast(dfq), Seq("term"))
+      .withColumn("idf_m", idfM(col("df"), lit(n)))
+      .select("qid", "term", "idf_m")
+
+  /** The scored-but-uncut half of the BM25 serve over a staged
+    * (candidates, dl, qtIdf, a) tuple: every candidate (qid, doc_id,
+    * score_u) — bounded by the postings of the queries' terms, never
+    * the corpus — each posting scoring `weight` (its term's idf_m, or a
+    * weighted idf_m) times the kernel's
+    * [[graft.functions.TextFunctions.termScore]]. ONE arithmetic for the
+    * corpus-sampled, external-query, appended and stream roads; the
+    * diversified serve (q164 in [[Dedup]]) takes it uncut to suppress
+    * near-dup cluster twins BEFORE the cut.
     */
-  private def bm25Score(
-      staged: (DataFrame, DataFrame, DataFrame, Long)): DataFrame = {
+  private[graft] def bm25Score(
+      staged: (DataFrame, DataFrame, DataFrame, Long),
+      weight: Column = col("idf_m")): DataFrame = {
     val (tf, dl, qtIdf, a) = staged
     tf.join(broadcast(qtIdf), Seq("term"))
       .join(dl, Seq("doc_id"))
-      .withColumn("tscore",
-        expr(s"idf_m * ((${2200 * a} * tf) div" +
-          s" (${10 * a} * tf + ${3 * a} + 9 * dl))"))
+      .withColumn("tscore", weight * termScore(col("tf"), col("dl"), lit(a)))
       .groupBy("qid", "doc_id").agg(sum("tscore").as("score_u"))
   }
 
-  /** The per-query rank cut every ranked serve ends with. */
-  private def bm25RankCut(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("score_u"), asc("doc_id"))
+  /** The per-query rank cut every lexical-family page ends with: rank
+    * each qid's rows by `scoreCol` descending, ties to the lowest
+    * doc_id, keep the first `k` as a long `rnk`, and project `cols`.
+    */
+  private[graft] def topPerQid(scored: DataFrame, scoreCol: String, k: Long,
+      cols: String*): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(desc(scoreCol), asc("doc_id"))
     scored
       .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= Bm25TopK)
-      .select("qid", "rnk", "doc_id", "score_u")
+      .filter(col("rnk") <= k)
+      .select(cols.head, cols.tail: _*)
   }
+
+  /** The BM25 page: [[topPerQid]] at [[Bm25TopK]] over scored
+    * (qid, doc_id, score_u) rows.
+    */
+  private[graft] def bm25RankCut(scored: DataFrame): DataFrame =
+    topPerQid(scored, "score_u", Bm25TopK, "qid", "rnk", "doc_id", "score_u")
 
   private[queries] def bm25ScoredDocs(s: SparkSession, dir: String,
       qids: DataFrame): DataFrame =
@@ -1322,10 +1314,6 @@ object TextAnalysis {
       tomb: Option[graft.StagedTombstones.DocTomb],
       page: DataFrame): DataFrame = {
     val (post, dlRel, dfRel, n, l) = lexRead(s, dir, tomb)
-    val a = math.max(1L, l / math.max(1L, n))
-    def idfOf(rel: DataFrame): DataFrame = rel
-      .withColumn("idf_m",
-        expr(s"(${2 * n} - 2*df + 1) * 1000 div (2*df + 1)"))
     // round 1 = the caller's page, cut to the feedback depth, collected
     // once (bounded by the rank cut)
     val fbRows: Seq[(Long, Long)] = page.filter(col("rnk") <= PrfFbDocs)
@@ -1340,7 +1328,7 @@ object TextAnalysis {
       .filter(col("doc_id").isin(fbIds.map(Long.box): _*))
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("ftf"))
-    // the capped query terms as a bounded literal (the lexQueryStage
+    // the capped query terms as a bounded literal (the lexStageOver
     // discipline): one collect feeds the anti-join, the round-2 original
     // term weights, AND the origTerms prune — the old shape re-derived
     // the tokenize→window subtree in each and paid a separate distinct
@@ -1353,7 +1341,7 @@ object TextAnalysis {
     // re-executed the whole feedback subtree (the bounded documents
     // fetch + tokenize + fold + anti-join + window) AGAIN inside the
     // expansion-winner collect — exchange reuse never spans actions, a
-    // bounded literal does (the lexQueryStage discipline). Spark's own
+    // bounded literal does (the lexStageOver discipline). Spark's own
     // tokenizer/cap produce the rows, so nothing can drift.
     val candRows: Array[org.apache.spark.sql.Row] = fb.join(fbTf, Seq("doc_id"))
       .groupBy("qid", "term").agg(sum("ftf").as("fw0"))
@@ -1375,9 +1363,10 @@ object TextAnalysis {
     // round-1 serve, and the final postings fetch prunes to winners
     // only, never the 32-wide candidate set. This action now costs one
     // pruned df fetch + a window over the literal candidates (r22).
-    val expRows: Seq[(Long, String, Long)] = idfOf(expCand
-        .join(broadcast(dfRel.filter(col("term").isin(candTerms: _*))),
-          Seq("term")))
+    val expRows: Seq[(Long, String, Long)] = expCand
+      .join(broadcast(dfRel.filter(col("term").isin(candTerms: _*))),
+        Seq("term"))
+      .withColumn("idf_m", idfM(col("df"), lit(n)))
       .withColumn("ew", col("fw0") * col("idf_m"))
       .withColumn("ern", row_number().over(we))
       .filter(col("ern") <= PrfExpTerms)
@@ -1388,22 +1377,14 @@ object TextAnalysis {
       .withColumn("w", lit(PrfExpW))
     // round 2: the weighted expanded term set through the one scoring
     // arithmetic (origTerms came with the qt literal — no extra collect)
-    val orig = idfOf(qt
-        .join(broadcast(dfRel.filter(col("term").isin(origTerms: _*))),
-          Seq("term")))
-      .select(col("qid"), col("term"), col("idf_m"))
+    val orig = termWeights(qt,
+        dfRel.filter(col("term").isin(origTerms: _*)), n)
       .withColumn("w", lit(PrfOrigW))
     val qtW = orig.unionByName(exp)
     val allTerms: Array[Any] =
       (origTerms ++ expRows.map(_._2)).distinct
-    val scored = post.filter(col("term").isin(allTerms: _*))
-      .join(broadcast(qtW), Seq("term"))
-      .join(dlRel, Seq("doc_id"))
-      .withColumn("tscore",
-        expr(s"w * idf_m * ((${2200 * a} * tf) div" +
-          s" (${10 * a} * tf + ${3 * a} + 9 * dl))"))
-      .groupBy("qid", "doc_id").agg(sum("tscore").as("score_u"))
-    bm25RankCut(scored)
+    bm25RankCut(bm25Score((post.filter(col("term").isin(allTerms: _*)),
+      dlRel, qtW, quantizedAvgDl(n, l)), col("w") * col("idf_m")))
   }
 
   /** L1→L2 feature re-rank (q181) — the production serving LADDER: a
@@ -1467,15 +1448,14 @@ object TextAnalysis {
           .withColumn("phrase_tf", coalesce(col("phrase_tf"), lit(0L)))
           .withColumn("prox_tf", coalesce(col("prox_tf"), lit(0L)))
       }
-    val w = Window.partitionBy("qid").orderBy(desc("final_u"), asc("doc_id"))
-    boosted
+    // the page holds ≤ Bm25TopK rows per qid, so the cut only re-ranks
+    topPerQid(boosted
       .withColumn("final_u", expr(
         s"score_u + (score_u div 1000) * " +
           s"($RerankPhraseBoostPm * least(phrase_tf, $RerankFeatCap) + " +
-          s"$RerankProxBoostPm * least(prox_tf, $RerankFeatCap))"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .select("qid", "rnk", "doc_id", "score_u", "phrase_tf", "prox_tf",
-        "final_u")
+          s"$RerankProxBoostPm * least(prox_tf, $RerankFeatCap))")),
+      "final_u", Bm25TopK,
+      "qid", "rnk", "doc_id", "score_u", "phrase_tf", "prox_tf", "final_u")
   }
 
   /** Builds (once per session+dir) the IMPACT-ORDERED sidecar of the
@@ -1501,8 +1481,8 @@ object TextAnalysis {
     val memoKey = (s.sparkContext.applicationId, dir)
     if (!s.catalog.tableExists(impT)) {
       val (postT, dlT, _, n, l) = ensureLexIndex(s, dir)
-      val a = math.max(1L, l / math.max(1L, n))
-      stageImpactFrom(s, impT, postT, dlT, impactKFor(s, dir), a)
+      stageImpactFrom(s, impT, postT, dlT, impactKFor(s, dir),
+        quantizedAvgDl(n, l))
       impactCurrent.put(memoKey, java.lang.Boolean.TRUE) // fresh ≡ current
     } else if (!impactCurrent.containsKey(memoKey)) {
       // CONSUME the q193 K-drift verdict instead of only publishing it
@@ -1544,7 +1524,7 @@ object TextAnalysis {
         if (stale) {
           s.sql(s"DROP TABLE `$impT`")
           stageImpactFrom(s, impT, postT, dlT, k,
-            math.max(1L, l / math.max(1L, n)))
+            quantizedAvgDl(n, l))
         }
         impactCurrent.put(memoKey, java.lang.Boolean.TRUE)
       }
@@ -1567,15 +1547,31 @@ object TextAnalysis {
     */
   private def stageImpactFrom(s: SparkSession, impT: String, postT: String,
       dlT: String, k: Long, a: Long): Unit = {
-    val w = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
-    val lists = s.table(postT).join(s.table(dlT), Seq("doc_id"))
-      .withColumn("imp", expr(
-        s"(${2200 * a} * tf) div (${10 * a} * tf + ${3 * a} + 9 * dl)"))
-      .withColumn("irn", row_number().over(w))
-      .filter(col("irn") <= k)
+    val lists = impactCut(withImpact(s.table(postT), s.table(dlT), a), k)
       .select("term", "doc_id", "tf", "imp")
     graft.Bucketing.stage(lists, impT, "term",
       graft.Bucketing.bucketCountFor(s.table(postT).count()))
+  }
+
+  /** Postings (doc_id, term, tf) joined to their (doc_id, dl) lengths
+    * with each posting's integer impact `imp` under the quantized
+    * average length `a` — the kernel's
+    * [[graft.functions.TextFunctions.termScore]] (idf is term-constant,
+    * so it is the within-term score order).
+    */
+  private[graft] def withImpact(post: DataFrame, dl: DataFrame,
+      a: Long): DataFrame =
+    post.join(dl, Seq("doc_id"))
+      .withColumn("imp", termScore(col("tf"), col("dl"), lit(a)))
+
+  /** The per-term impact cut: each term's `k` rows with the highest
+    * `imp`, ties to the lowest doc_id — ONE definition for the batch
+    * sidecar's staging and append and the stream sidecar's epoch,
+    * rebuild and serve-time cuts.
+    */
+  private[graft] def impactCut(rel: DataFrame, k: Long): DataFrame = {
+    val w = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
+    rel.withColumn("irn", row_number().over(w)).filter(col("irn") <= k)
   }
 
   /** Incremental maintenance of the impact sidecar under a corpus
@@ -1613,14 +1609,10 @@ object TextAnalysis {
       .agg(count(lit(1)).as("len")).filter(col("len") >= kOld)
       .select("term")
     val recut = deltaVocab.union(truncated).distinct()
-    val w = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
     graft.Bucketing.rewriteInPlace(s, impT, t => {
-      val fresh = s.table(postT).join(recut, Seq("term"), "left_semi")
-        .join(s.table(dlT), Seq("doc_id"))
-        .withColumn("imp", expr(s"(${2200 * aNew} * tf) div " +
-          s"(${10 * aNew} * tf + ${3 * aNew} + 9 * dl)"))
-        .withColumn("irn", row_number().over(w))
-        .filter(col("irn") <= kNew)
+      val fresh = impactCut(withImpact(
+          s.table(postT).join(recut, Seq("term"), "left_semi"),
+          s.table(dlT), aNew), kNew)
         .select("term", "doc_id", "tf", "imp")
       // non-re-cut terms keep their MEMBERSHIP (complete lists are exact
       // under any K) but their stored `imp` re-derives under the union
@@ -1630,11 +1622,8 @@ object TextAnalysis {
       // impact-mass card) would silently drift. The recompute is
       // sidecar-sized: one dl join over the kept rows, never a corpus
       // read (RetrievalSpec pins column identity with the fresh staging).
-      val kept = t.join(recut, Seq("term"), "left_anti")
-        .select("term", "doc_id", "tf")
-        .join(s.table(dlT), Seq("doc_id"))
-        .withColumn("imp", expr(s"(${2200 * aNew} * tf) div " +
-          s"(${10 * aNew} * tf + ${3 * aNew} + 9 * dl)"))
+      val kept = withImpact(t.join(recut, Seq("term"), "left_anti")
+          .select("term", "doc_id", "tf"), s.table(dlT), aNew)
         .select("term", "doc_id", "tf", "imp")
       kept.union(fresh)
     })
@@ -1677,22 +1666,8 @@ object TextAnalysis {
       qtexts: DataFrame,
       tomb: Option[graft.StagedTombstones.DocTomb])
       : (DataFrame, DataFrame, DataFrame, Long) =
-    impactStageOver(impactRead(s, dir, tomb), lexRead(s, dir, tomb), qtexts)
-
-  /** The impact staging half over EXPLICIT (masked) relations — the
-    * [[bm25StageOver]] factoring for the approximate road, so the
-    * appended demo family (q188) stages through the identical
-    * definition.
-    */
-  private def impactStageOver(imp: DataFrame,
-      rels: (DataFrame, DataFrame, DataFrame, Long, Long),
-      qtexts: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
-    val (_, dlRel, _, _, _) = rels
-    val (qtIdf, a, terms) = lexQueryStage(rels, qtexts)
-    val cand = imp.filter(col("term").isin(terms: _*))
-      .select("term", "doc_id", "tf")
-    (cand, dlRel, qtIdf, a)
-  }
+    lexStageOver(impactRead(s, dir, tomb).select("term", "doc_id", "tf"),
+      lexRead(s, dir, tomb), qtexts)
 
   private[queries] def impactTopDocs(s: SparkSession, dir: String,
       qids: DataFrame,
@@ -1902,14 +1877,10 @@ object TextAnalysis {
   }
 
   private[graft] def phraseAdjacencyTopDocs(post: DataFrame, qp: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("phrase_tf"), asc("doc_id"))
-    phraseAdjacencyMatches(post, qp, k)
-      .groupBy("qid", "doc_id").agg(count(lit(1)).as("phrase_tf"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= Bm25TopK)
-      .select("qid", "rnk", "doc_id", "phrase_tf")
-  }
+      k: Int): DataFrame =
+    topPerQid(phraseAdjacencyMatches(post, qp, k)
+        .groupBy("qid", "doc_id").agg(count(lit(1)).as("phrase_tf")),
+      "phrase_tf", Bm25TopK, "qid", "rnk", "doc_id", "phrase_tf")
 
   /** q161: the phrase serve with the SNIPPET ANCHOR — the q154 ranking
     * plus each hit's first occurrence offset (min anchor position,
@@ -1926,15 +1897,11 @@ object TextAnalysis {
     * anchor, shared by the corpus-sampled and external-query serves.
     */
   private def phraseSnippetFold(post: DataFrame, qp: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("phrase_tf"), asc("doc_id"))
-    phraseAdjacencyMatches(post, qp, k)
-      .groupBy("qid", "doc_id").agg(count(lit(1)).as("phrase_tf"),
-        min("pos").cast("long").as("first_pos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= Bm25TopK)
-      .select("qid", "rnk", "doc_id", "phrase_tf", "first_pos")
-  }
+      k: Int): DataFrame =
+    topPerQid(phraseAdjacencyMatches(post, qp, k)
+        .groupBy("qid", "doc_id").agg(count(lit(1)).as("phrase_tf"),
+          min("pos").cast("long").as("first_pos")),
+      "phrase_tf", Bm25TopK, "qid", "rnk", "doc_id", "phrase_tf", "first_pos")
 
   /** ONE positional-family serve body for both query roads: build the
     * phrase table, collect its bounded term set, prune the masked
@@ -1949,7 +1916,7 @@ object TextAnalysis {
       empty)(fold)
 
   /** The positional serve skeleton over an EXPLICIT (masked) positional
-    * relation — the [[bm25StageOver]] factoring for the positional
+    * relation — the [[lexStageOver]] factoring for the positional
     * family, so the appended demo family (q189) serves through the
     * identical term-pruned definition.
     */
@@ -2039,14 +2006,11 @@ object TextAnalysis {
       .select(col("qid"), col("doc_id"), col("pos"), col("t2"))
     val next = post.select(col("doc_id").as("doc_n"),
       col("term").as("term_n"), col("pos").as("pos_n"))
-    val w = Window.partitionBy("qid").orderBy(desc("prox_tf"), asc("doc_id"))
-    lead.join(next, col("doc_n") === col("doc_id") &&
-        col("term_n") === col("t2") &&
-        col("pos_n") > col("pos") && col("pos_n") <= col("pos") + win)
-      .groupBy("qid", "doc_id").agg(count(lit(1)).as("prox_tf"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= Bm25TopK)
-      .select("qid", "rnk", "doc_id", "prox_tf")
+    topPerQid(lead.join(next, col("doc_n") === col("doc_id") &&
+          col("term_n") === col("t2") &&
+          col("pos_n") > col("pos") && col("pos_n") <= col("pos") + win)
+        .groupBy("qid", "doc_id").agg(count(lit(1)).as("prox_tf")),
+      "prox_tf", Bm25TopK, "qid", "rnk", "doc_id", "prox_tf")
   }
 
   private[queries] def proximityTopDocs(s: SparkSession, dir: String,
@@ -2878,9 +2842,9 @@ object TextAnalysis {
     // all exactly additive under disjoint doc sets).
     "q187_lex_append_topk" -> ((s, dir) => {
       val (postT, dlT, dfT, _, _, n, l) = ensureAppendedLex(s, dir)
-      bm25RankCut(bm25Score(bm25StageOver(
-        lexMaskOver(s, s.table(postT), s.table(dlT), s.table(dfT), n, l,
-          registryTomb(s, dir)),
+      val rels = lexMaskOver(s, s.table(postT), s.table(dlT), s.table(dfT),
+        n, l, registryTomb(s, dir))
+      bm25RankCut(bm25Score(lexStageOver(rels._1, rels,
         corpusQTexts(s, dir, docModQids(s, dir)))))
     }),
 
@@ -2957,7 +2921,7 @@ object TextAnalysis {
       val tomb = registryTomb(s, dir)
       val imp = graft.StagedTombstones.masked(
         s, s.table(impT), tomb.map(_.ids), "doc_id")
-      bm25RankCut(bm25Score(impactStageOver(imp,
+      bm25RankCut(bm25Score(lexStageOver(imp.select("term", "doc_id", "tf"),
         lexMaskOver(s, s.table(postT), s.table(dlT), s.table(dfT), n, l,
           tomb),
         corpusQTexts(s, dir, docModQids(s, dir)))))
@@ -3030,7 +2994,7 @@ object TextAnalysis {
     // cross-checks the staged index against its definition.
     "q160_lex_index_card" -> ((s, dir) => {
       val (_, _, dfRel, n, l) = lexRead(s, dir, registryTomb(s, dir))
-      val a = math.max(1L, l / math.max(1L, n))
+      val a = quantizedAvgDl(n, l)
       dfRel
         .agg(
           count(lit(1)).as("n_terms"),

@@ -802,14 +802,13 @@ object DocStream {
     * candidate rule, so a zero-idf term still matches at score 0 — in
     * any output mode: no shuffle, no state, no watermark.
     *
-    * The arithmetic is q148's integer fixed point VERBATIM (same
-    * tfn_c, same milli idf, per-term int64 products summed exactly) so
-    * stream scores hash-equal the batch serve's on the same document
+    * The arithmetic is the lexical kernel's
+    * ([[graft.functions.TextFunctions.termScore]] times the frozen
+    * idf_m, per-term int64 products summed exactly) so stream scores
+    * hash-equal the batch serve's on the same document
     * (RetrievalStreamSpec pins the fixture's hand-computed scores on
-    * both paths). Floor division realizes as (x − x mod y)/y — exact
-    * because the numerator is then divisible, and every operand is
-    * ≪ 2⁵³ under the q148 headroom proof; query terms bind as `lit`
-    * Columns (corpus text never meets a SQL parser). Per-row cost is
+    * both paths); query terms bind as `lit` Columns (corpus text never
+    * meets a SQL parser). Per-row cost is
     * |terms ≤ sample·cap| array scans — the bounded standing-query
     * contract.
     */
@@ -817,15 +816,11 @@ object DocStream {
       queryTerms: Seq[(Long, String, Long)]): DataFrame = {
     val tk = tokens(col("text"))
     val dl = size(tk).cast("long")
-    def floorDiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     val scoreCols = queryTerms.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (qid, ts) =>
-        val parts = ts.map { case (_, term, idfM) =>
+        val parts = ts.map { case (_, term, idf) =>
           val tf = size(filter(tk, x => x === lit(term))).cast("long")
-          val num = lit(2200L * a) * tf
-          val den = lit(10L * a) * tf + lit(3L * a) + lit(9L) * dl
-          (tf, lit(idfM) * floorDiv(num, den))
+          (tf, lit(idf) * termScore(tf, dl, lit(a)))
         }
         struct(lit(qid).as("qid"),
           parts.map(_._2).reduce(_ + _).as("score_u"),

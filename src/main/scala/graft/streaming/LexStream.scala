@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.functions.TextFunctions._
+import graft.queries.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the LEXICAL inverted index — the
@@ -159,8 +159,8 @@ object LexStream {
             "scalars from the paired lex root's stats — fold the lex " +
             "batch first (the runLexIndex ordering)"))
         val (n, l) = statScalars(statRows(spark, lexPath, servable))
-        val a = math.max(1L, l / math.max(1L, n))
-        val k = graft.queries.TextAnalysis.impactKOf(spark, n)
+        val a = quantizedAvgDl(n, l)
+        val k = TextAnalysis.impactKOf(spark, n)
         writeScalars(spark, impPath, a, k)
         (a, k)
     }
@@ -275,24 +275,33 @@ object LexStream {
       val tf = stable
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val w = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
-      val cut = tf.join(dl, Seq("doc_id"))
-        .withColumn("imp", expr(s"(${2200 * a} * tf) div " +
-          s"(${10 * a} * tf + ${3 * a} + 9 * dl)"))
-        .withColumn("irn", row_number().over(w))
-        .filter(col("irn") <= k)
-        .select(col("doc_id"), col("term"), col("tf"), col("imp"))
-      val dfRows = tf.groupBy("term").agg(count(lit(1)).as("tf"))
-        .select(lit(null).cast("long").as("doc_id"), col("term"),
-          col("tf"), lit(null).cast("long").as("imp"))
-      cut.unionByName(dfRows)
-        .withColumn("tb", termBucket(col("term")))
+      impactEpochRows(tf, tf.groupBy("doc_id").agg(sum("tf").as("dl")), a, k)
         .write.partitionBy("tb").mode("overwrite")
         .parquet(s"$impPath/batch_id=$batchId")
       BatchProtocol.commit(spark, impPath, batchId)
     } finally graft.CheckpointBlocks.free(spark, stableIds)
   }
+
+  /** An impact-root epoch's rows over postings `post` (doc_id, term,
+    * tf) with lengths `dl` (doc_id, dl): each term's top-`k` postings by
+    * impact under `a`, plus one df-delta row per term, `tb`-partitioned
+    * — the layout [[processImpactBatch]] writes per batch and
+    * [[rebuildImpactIndex]] writes for the whole root.
+    */
+  private def impactEpochRows(post: DataFrame, dl: DataFrame, a: Long,
+      k: Long): DataFrame =
+    TextAnalysis.impactCut(TextAnalysis.withImpact(post, dl, a), k)
+      .select(col("doc_id"), col("term"), col("tf"), col("imp"))
+      .unionByName(dfDeltaRows(post))
+      .withColumn("tb", termBucket(col("term")))
+
+  /** One df-delta row (doc_id = NULL, term, tf = df, imp = NULL) per
+    * term of the postings `post`.
+    */
+  private def dfDeltaRows(post: DataFrame): DataFrame =
+    post.groupBy("term").agg(count(lit(1)).as("tf"))
+      .select(lit(null).cast("long").as("doc_id"), col("term"),
+        col("tf"), lit(null).cast("long").as("imp"))
 
   /** Streaming incremental lexical indexing: every micro-batch of
     * documents folds into `<lexPath>` — and, when `posPath` /
@@ -395,7 +404,7 @@ object LexStream {
       queries.select(col("qid"), lit(0L).as("rnk"),
         lit(0L).as("doc_id"), lit(0L).as("phrase_tf")).limit(0)
     else
-      graft.queries.TextAnalysis.phraseAdjacencyTopDocs(
+      TextAnalysis.phraseAdjacencyTopDocs(
         masked(spark, posPath, servable.get
           .filter(col("tb").isin(tbs: _*))
           .filter(col("term").isin(terms: _*))
@@ -472,29 +481,25 @@ object LexStream {
     * corpus scalars and dl come from the stat partition alone; the
     * final cut is a qid-partitioned window (WindowGroupLimit).
     */
-  /** The per-query CAPPED term set plus its bounded driver read (≤
-    * |queries|·cap rows — the bm25Stage discipline): the capped (qid,
-    * term) relation, the distinct term literals, and their buckets —
-    * ONE definition for the exact serve and the impact serve, so the
-    * two roads cannot drift on what "the query's terms" means.
+  /** The per-query CAPPED term set — the batch serve's
+    * [[TextAnalysis.cappedTerms]] plus each term's bucket — and its
+    * bounded driver read (≤ |queries|·cap rows — the bm25Stage
+    * discipline): the capped (qid, term) relation, the distinct term
+    * literals, and their buckets, shared by the exact serve and the
+    * impact serve, so no road can drift on what "the query's terms"
+    * means.
     */
   private def cappedTermRows(queries: DataFrame)
       : (DataFrame, Array[Any], Array[Any]) = {
-    import graft.queries.TextAnalysis.Bm25QTermCap
-    val qt0 = queries
-      .select(col("qid"), explode(tokens(col("qtext"))).as("term"))
-      .groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
-    val wq = Window.partitionBy("qid").orderBy(desc("qtf"), asc("term"))
     // collected as the full capped (qid, term, tb) rows rather than just
     // the distinct (term, tb) pairs: qt then re-enters the serve plan as
     // a literal relation, so the tokenize → tf-count → window subtree
     // executes exactly once per serve instead of once in this collect
     // and AGAIN inside the main action's qtIdf broadcast (r21 — the
-    // batch lexQueryStage discipline; same action count, two fewer
+    // batch lexStageOver discipline; same action count, two fewer
     // exchanges per serve plan). Spark's own tokenizer/cap/bucket hash
     // produce the rows, so nothing can drift.
-    val rows = qt0.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= Bm25QTermCap)
+    val rows = TextAnalysis.cappedTerms(queries)
       .select(col("qid"), col("term"), termBucket(col("term")).as("tb"))
       .collect()
     val qt = queries.sparkSession.createDataFrame(
@@ -537,7 +542,6 @@ object LexStream {
       queries: DataFrame,
       capped: (DataFrame, Array[Any], Array[Any]),
       inputs: Option[(DataFrame, DataFrame, Long, Long)]): DataFrame = {
-    import graft.queries.TextAnalysis.Bm25TopK
     val (qt, terms, tbs) = capped
     // aggregate-consumer discipline: exclude crash-superseded epochs,
     // and serve a defined empty on an epoch-less new index
@@ -549,7 +553,6 @@ object LexStream {
         lit(0L).as("doc_id"), lit(0L).as("score_u")).limit(0)
     else {
       val (servableLex, stats, n, l) = inputs.get
-      val a = math.max(1L, l / math.max(1L, n))
       // the takedown mask applies to candidates AND (via statRows) the
       // corpus scalars/dl, so a deleted doc vanishes from df and idf
       // exactly as a rebuild-without-it would have it
@@ -560,20 +563,8 @@ object LexStream {
       // df derives from the pruned postings — the accumulated layout
       // maintains ONE relation, not three
       val dfq = post.groupBy("term").agg(count(lit(1)).as("df"))
-      val qtIdf = qt.join(broadcast(dfq), Seq("term"))
-        .withColumn("idf_m",
-          expr(s"(${2 * n} - 2*df + 1) * 1000 div (2*df + 1)"))
-        .select("qid", "term", "idf_m")
-      val w = Window.partitionBy("qid").orderBy(desc("score_u"), asc("doc_id"))
-      post.join(broadcast(qtIdf), Seq("term"))
-        .join(stats, Seq("doc_id"))
-        .withColumn("tscore",
-          expr(s"idf_m * ((${2200 * a} * tf) div" +
-            s" (${10 * a} * tf + ${3 * a} + 9 * dl))"))
-        .groupBy("qid", "doc_id").agg(sum("tscore").as("score_u"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= Bm25TopK)
-        .select("qid", "rnk", "doc_id", "score_u")
+      TextAnalysis.bm25RankCut(TextAnalysis.bm25Score((post, stats,
+        TextAnalysis.termWeights(qt, dfq, n), quantizedAvgDl(n, l))))
     }
   }
 
@@ -606,7 +597,6 @@ object LexStream {
       impPath: String, queries: DataFrame,
       capped: (DataFrame, Array[Any], Array[Any]),
       inputs: Option[(DataFrame, DataFrame, Long, Long)]): DataFrame = {
-    import graft.queries.TextAnalysis.Bm25TopK
     val (qt, terms, tbs) = capped
     val servableImp = BatchProtocol.readServable(spark, impPath)
     if (terms.isEmpty || servableImp.isEmpty || inputs.isEmpty)
@@ -626,10 +616,8 @@ object LexStream {
       // re-cut lets survivors backfill a deleted head's slot from the
       // stored tail — the same rows a fresh cut over the reduced
       // arrivals would keep whenever the tail is stored
-      val wk = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
-      val cand = masked(spark, impPath, pruned.filter(col("doc_id").isNotNull))
-        .withColumn("irn", row_number().over(wk))
-        .filter(col("irn") <= k)
+      val cand = TextAnalysis.impactCut(
+          masked(spark, impPath, pruned.filter(col("doc_id").isNotNull)), k)
         .select("doc_id", "term", "tf")
       val dfAgg = pruned.filter(col("doc_id").isNull)
         .groupBy("term").agg(sum("tf").as("df0"))
@@ -646,21 +634,8 @@ object LexStream {
               (col("df0") - coalesce(col("ddf"), lit(0L))).as("df"))
             .filter(col("df") > 0)
       }
-      val a = math.max(1L, l / math.max(1L, n))
-      val qtIdf = qt.join(broadcast(dfq), Seq("term"))
-        .withColumn("idf_m",
-          expr(s"(${2 * n} - 2*df + 1) * 1000 div (2*df + 1)"))
-        .select("qid", "term", "idf_m")
-      val w = Window.partitionBy("qid").orderBy(desc("score_u"), asc("doc_id"))
-      cand.join(broadcast(qtIdf), Seq("term"))
-        .join(stats, Seq("doc_id"))
-        .withColumn("tscore",
-          expr(s"idf_m * ((${2200 * a} * tf) div" +
-            s" (${10 * a} * tf + ${3 * a} + 9 * dl))"))
-        .groupBy("qid", "doc_id").agg(sum("tscore").as("score_u"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= Bm25TopK)
-        .select("qid", "rnk", "doc_id", "score_u")
+      TextAnalysis.bm25RankCut(TextAnalysis.bm25Score((cand, stats,
+        TextAnalysis.termWeights(qt, dfq, n), quantizedAvgDl(n, l))))
     }
   }
 
@@ -719,11 +694,8 @@ object LexStream {
           case None => rel.filter(col("doc_id").isNull)
             .select("doc_id", "term", "tf", "imp").limit(0)
           case Some(lx) =>
-            masked(spark, lexPath, lx.filter(col("tb") =!= StatBucket)
-                .select("doc_id", "term"))
-              .groupBy("term").agg(count(lit(1)).as("tf"))
-              .select(lit(null).cast("long").as("doc_id"), col("term"),
-                col("tf"), lit(null).cast("long").as("imp"))
+            dfDeltaRows(masked(spark, lexPath,
+              lx.filter(col("tb") =!= StatBucket).select("doc_id", "term")))
         }
         // the layout column re-derives (tb is functional in term, so
         // the recompute equals the stored value on the kept rows)
@@ -752,8 +724,8 @@ object LexStream {
     val (n, l) = BatchProtocol.readServable(spark, lexPath)
       .map(lx => statScalars(statRows(spark, lexPath, lx)))
       .getOrElse((0L, 0L))
-    val aC = math.max(1L, l / math.max(1L, n))
-    val kC = graft.queries.TextAnalysis.impactKOf(spark, n)
+    val aC = quantizedAvgDl(n, l)
+    val kC = TextAnalysis.impactKOf(spark, n)
     val drifted = kF > 0L && kC.toDouble >= growthFactor * kF
     Seq((aF, kF, aC, kC, n, if (drifted) 1L else 0L))
       .toDF("a_frozen", "k_frozen", "a_current", "k_current",
@@ -804,20 +776,10 @@ object LexStream {
         s"root's postings — $lexPath holds no epochs"))
     val stats = statRows(spark, lexPath, lx)
     val (n, l) = statScalars(stats)
-    val aNew = math.max(1L, l / math.max(1L, n))
-    val kNew = graft.queries.TextAnalysis.impactKOf(spark, n)
+    val aNew = quantizedAvgDl(n, l)
+    val kNew = TextAnalysis.impactKOf(spark, n)
     val post = masked(spark, lexPath, lx.filter(col("tb") =!= StatBucket)
       .select("doc_id", "term", "tf"))
-    val w = Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
-    val cut = post.join(stats, Seq("doc_id"))
-      .withColumn("imp", expr(s"(${2200 * aNew} * tf) div " +
-        s"(${10 * aNew} * tf + ${3 * aNew} + 9 * dl)"))
-      .withColumn("irn", row_number().over(w))
-      .filter(col("irn") <= kNew)
-      .select(col("doc_id"), col("term"), col("tf"), col("imp"))
-    val dfFresh = post.groupBy("term").agg(count(lit(1)).as("tf"))
-      .select(lit(null).cast("long").as("doc_id"), col("term"),
-        col("tf"), lit(null).cast("long").as("imp"))
     // the consolidation anchor: compactIndex folds THROUGH a live
     // stream epoch id. A root whose arrivals all compacted already has
     // none — append a committed EMPTY epoch one past the watermark (a
@@ -833,8 +795,7 @@ object LexStream {
         anchor
     }
     BatchProtocol.compactIndex(spark, impPath, upTo, Seq("tb"),
-      rowFilter = _ => cut.unionByName(dfFresh)
-        .withColumn("tb", termBucket(col("term"))))
+      rowFilter = _ => impactEpochRows(post, stats, aNew, kNew))
     Tombstones.consolidate(spark, impPath, upTo, "doc_id")
     writeScalars(spark, impPath, aNew, kNew)
   }
