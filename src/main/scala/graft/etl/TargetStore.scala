@@ -87,32 +87,52 @@ final class TargetStore(
     * job partition is grid-bounded by the Sheets data model (~10M
     * cells), so one file per job is always under any sane target size.
     *
-    * Two-hop rewrite: stage to a sibling temp dir (a Spark write cannot
-    * read its own target), then dynamic-partition-overwrite back — the
-    * SAME per-partition swap a reload uses, so a crash at any point
-    * leaves every partition readable with identical rows (some
-    * compacted, some not; a re-run finishes the job). Returns
-    * (files before, files after).
+    * Two-hop rewrite: stage to a sibling dir (a Spark write cannot read
+    * its own target), then dynamic-partition-overwrite back — the SAME
+    * per-partition swap a reload uses. That swap's commit deletes each
+    * partition and then renames the staged copy in, so a crash between
+    * the two leaves one partition missing from the table, while the
+    * stage, marked complete by its `_SUCCESS`, still holds its rows. The
+    * stage is therefore removed only after the swap returns, and every
+    * run first settles a leftover one: a complete stage restores each
+    * partition the table lacks (a partition still present is either
+    * uncompacted with the same rows or reloaded since, and must not be
+    * overwritten with staged rows), an incomplete stage is deleted.
+    * Between a crash and the next run the lost partition reads as empty.
+    * Returns (files before, files after).
     */
   def compact(targetTable: String): (Long, Long) = {
     val p = path(targetTable)
     val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new Path(compactStage(targetTable))
+    if (fs.exists(new Path(stage, "_SUCCESS")))
+      fs.listStatus(stage).map(_.getPath)
+        .filter(_.getName.startsWith("_origin_etl_job_id="))
+        .filterNot(part => fs.exists(new Path(p, part.getName)))
+        .foreach { part =>
+          fs.mkdirs(new Path(p))
+          if (!fs.rename(part, new Path(p, part.getName)))
+            throw new java.io.IOException(s"Cannot restore $part into $p")
+        }
+    fs.delete(stage, true)
     val before = dataFileCount(targetTable)
-    val tmp = s"$p.__compact_stage"
     read(targetTable)
       // one shuffle keyed on the partition column: each job's rows land
       // whole in one task, so partitionBy emits exactly one file per job
       .repartition(org.apache.spark.sql.functions.col("_origin_etl_job_id"))
       .write.partitionBy("_origin_etl_job_id")
-      .mode("overwrite").parquet(tmp)
-    try
-      spark.read.option("mergeSchema", "true").parquet(tmp)
-        .write.partitionBy("_origin_etl_job_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(p)
-    finally fs.delete(new Path(tmp), true)
+      .mode("overwrite").parquet(stage.toString)
+    spark.read.option("mergeSchema", "true").parquet(stage.toString)
+      .write.partitionBy("_origin_etl_job_id")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(p)
+    fs.delete(stage, true)
     (before, dataFileCount(targetTable))
   }
+
+  /** Where [[compact]] stages a table's rewrite. */
+  private[etl] def compactStage(targetTable: String): String =
+    s"${path(targetTable)}.__compact_stage"
 
   /** Number of parquet data files under a target table — the
     * fragmentation signal the compaction cadence watches. */

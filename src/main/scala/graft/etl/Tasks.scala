@@ -15,13 +15,17 @@ package graft.etl
   * data write, and hashes are committed after the last.
   *
   * `loadTime` is captured once per run and stamps every `last_seen`
-  * (reference: src/DatabaseAgent.php:86).
+  * (reference: src/DatabaseAgent.php:86). Building a `Tasks` also starts
+  * the accounting store's tick-scoped copy ([[MetaStore.beginTick]]): one
+  * run reads each accounting table at most once.
   */
 final class Tasks(
     source: GridSource,
     meta: MetaStore,
     targets: TargetStore,
     val loadTime: Long = System.currentTimeMillis() / 1000) {
+
+  meta.beginTick()
 
   /** Default cursor epoch (reference: src/Tasks.php:36-41) — the
     * discovery stream's [[CursorOffset.Epoch]].

@@ -83,30 +83,42 @@ object LexStream {
     */
   private def scalarsDir(impPath: String) = s"$impPath/_scalars"
 
+  /** One scalar marker: write sequence, mtime, value, file name. A name is
+    * `<prefix><seq>-<value>`. Sequence 0, the first write to a root (or
+    * any marker of a root written before sequencing), is spelled
+    * `<prefix><value>`.
+    */
+  private final case class Marker(seq: Long, mtime: Long, value: Long, name: String)
+
+  private def markerName(prefix: String, seq: Long, value: Long) =
+    if (seq == 0) s"$prefix$value" else s"$prefix$seq-$value"
+
+  private def markers(f: org.apache.hadoop.fs.FileSystem, impPath: String,
+      prefix: String): Seq[Marker] =
+    f.listStatus(new org.apache.hadoop.fs.Path(scalarsDir(impPath))).toSeq
+      .filter(_.getPath.getName.startsWith(prefix)).map { st =>
+        val name = st.getPath.getName
+        val body = name.stripPrefix(prefix)
+        val (seq, value) = body.indexOf('-', 1) match {
+          case -1 => (0L, body)
+          case i => (body.take(i).toLong, body.drop(i + 1))
+        }
+        Marker(seq, st.getModificationTime, value.toLong, name)
+      }
+
+  /** The marker in force: highest sequence. Only sequence-0 markers can
+    * tie, on a root whose pre-sequencing writer crashed between creating
+    * the new marker and deleting the stale one; they keep that writer's
+    * rule, newest mtime and then the larger value.
+    */
+  private def current(ms: Seq[Marker]): Option[Marker] =
+    ms.maxByOption(m => (m.seq, m.mtime, m.value))
+
   private[streaming] def readMarker(spark: SparkSession, impPath: String,
       prefix: String): Option[Long] = {
     val f = fs(spark, impPath)
-    val root = new org.apache.hadoop.fs.Path(scalarsDir(impPath))
-    if (!f.exists(root)) None
-    else {
-      // the both-files crash window (writeScalars creates the new marker
-      // BEFORE deleting the stale one) resolves by NEWEST mtime, not max
-      // value (r22, the advisor's fix): a max-value fold is only correct
-      // while marker values grow monotonically across re-adoptions — a
-      // rebuild that SHRINKS a/K (takedowns reducing N) crashed in the
-      // window would otherwise serve the stale LARGER value silently and
-      // permanently. Ties on mtime (same-clock-tick crash) fall back to
-      // max value — the growth direction the old fold assumed, and the
-      // only remaining ambiguity.
-      f.listStatus(root).iterator
-        .filter(_.getPath.getName.startsWith(prefix))
-        .map(st => (st.getModificationTime,
-          st.getPath.getName.stripPrefix(prefix).toLong))
-        .foldLeft(None: Option[(Long, Long)])((acc, mv) =>
-          Some(acc.fold(mv)(a => if (mv._1 > a._1 ||
-            (mv._1 == a._1 && mv._2 > a._2)) mv else a)))
-        .map(_._2)
-    }
+    if (!f.exists(new org.apache.hadoop.fs.Path(scalarsDir(impPath)))) None
+    else current(markers(f, impPath, prefix)).map(_.value)
   }
 
   private[streaming] def writeScalars(spark: SparkSession, impPath: String, a: Long,
@@ -114,27 +126,25 @@ object LexStream {
     val f = fs(spark, impPath)
     val root = new org.apache.hadoop.fs.Path(scalarsDir(impPath))
     f.mkdirs(root)
-    // create-new-THEN-delete-stale (r21, the advisor's crash-window fix):
-    // the old order deleted first, so a crash between the delete and the
-    // create left a marker-LESS root — impactTopDocs would sys.error and
-    // the next processImpactBatch silently re-adopt scalars from current
-    // lex stats instead of surfacing a recoverable crash. With creation
-    // first the root always carries ≥ 1 marker per prefix; readMarker
-    // resolves the brief both-files window by newest mtime (r22 — max
-    // value was only sound in the growth direction). After the deletes,
+    // create-new-THEN-delete-stale (r21): a crash between the two leaves
+    // both markers, never none, and the new one carries the next
+    // sequence, so readMarker resolves the window to it in either
+    // direction of change and whatever the mtimes say. A marker already
+    // in force with this value is kept as it is. After the deletes,
     // assert exactly one marker per prefix: a survivor here means a
     // concurrent writer or a failed delete, and serving on silently
     // would reintroduce the ambiguity the protocol exists to close.
     Seq(APrefix -> a, KPrefix -> k).foreach { case (p, v) =>
-      f.create(new org.apache.hadoop.fs.Path(
-        s"${scalarsDir(impPath)}/$p$v"), true).close()
-      f.listStatus(root).iterator
-        .map(_.getPath).filter(x => x.getName.startsWith(p) &&
-          x.getName != s"$p$v")
-        .foreach(x => f.delete(x, false))
-      val left = f.listStatus(root).iterator
-        .map(_.getPath.getName).filter(_.startsWith(p)).toSeq
-      require(left == Seq(s"$p$v"),
+      val now = current(markers(f, impPath, p))
+      val keep = now.filter(_.value == v).map(_.name).getOrElse {
+        val name = markerName(p, now.fold(0L)(_.seq + 1), v)
+        f.create(new org.apache.hadoop.fs.Path(root, name), true).close()
+        name
+      }
+      markers(f, impPath, p).filter(_.name != keep)
+        .foreach(m => f.delete(new org.apache.hadoop.fs.Path(root, m.name), false))
+      val left = markers(f, impPath, p).map(_.name)
+      require(left == Seq(keep),
         s"impact root $impPath: marker write left ${left.mkString(",")} " +
           s"under $p — stale markers survived the delete pass")
     }

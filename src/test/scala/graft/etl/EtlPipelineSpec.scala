@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.SparkTestSession
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -218,15 +218,17 @@ class EtlPipelineSpec extends AnyFunSuite {
 
     test(s"[$backend] a load phase reads each accounting table once, commits once") {
       var storage: CountingMetaStorage = null
-      val (dir, tasks, meta, _) = freshWorld(backend, s => { storage = new CountingMetaStorage(s); storage })
+      val (dir, _, meta, targets) = freshWorld(backend, s => { storage = new CountingMetaStorage(s); storage })
       writeZoe(dir)
       writeFixture(dir, "c.json", Sid3, "Sheet1", "2026-05-05T00:00:00.000Z", Seq(Seq("Name"), Seq("Yan")))
-      tasks.setConfiguration(Seq(peopleCfg, zoeCfg,
-        EtlConfig(Sid3, "Sheet1", "yan", Seq("name" -> Right("Name")))))
+      val configs = Seq(peopleCfg, zoeCfg, EtlConfig(Sid3, "Sheet1", "yan", Seq("name" -> Right("Name"))))
       val tables = Seq(meta.SpreadsheetsTable, meta.EtlJobsTable)
-      // one tick: (sheets loaded, load-phase reads per table, load-phase
-      // __meta_etl_jobs replaces)
+      // one tick on a new Tasks: (sheets loaded, load-phase reads per
+      // table, load-phase __meta_etl_jobs replaces); discovery has already
+      // read __meta_spreadsheets, so the load phase reads only the jobs
       def tick(): (Int, Seq[Int], Int) = {
+        val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+        tasks.setConfiguration(configs)
         tasks.findSomeUpdatedSpreadsheets()
         val reads = tables.map(storage.reads)
         val replaces = storage.replaces(meta.EtlJobsTable)
@@ -234,11 +236,63 @@ class EtlPipelineSpec extends AnyFunSuite {
         (loaded.size, tables.map(storage.reads).zip(reads).map { case (a, b) => a - b },
           storage.replaces(meta.EtlJobsTable) - replaces)
       }
-      assert(tick() == ((3, Seq(1, 1), 2))) // cold: job rows, then one commit
+      assert(tick() == ((3, Seq(0, 1), 2))) // cold: job rows, then one commit
       writeZoe(dir, "2026-05-06T00:00:00.000Z", "Zed")
       writeFixture(dir, "c.json", Sid3, "Sheet1", "2026-05-06T00:00:00.000Z", Seq(Seq("Name"), Seq("Yul")))
-      assert(tick() == ((2, Seq(1, 1), 1))) // two reloads: one commit
-      assert(tick() == ((0, Seq(1, 1), 0))) // idle
+      assert(tick() == ((2, Seq(0, 1), 1))) // two reloads: one commit
+      assert(tick() == ((0, Seq(0, 1), 0))) // idle
+    }
+
+    test(s"[$backend] a tick on a new Tasks reads each accounting table at most once; a cold tick reads none") {
+      val dir = Files.createTempDirectory("graft-fixtures")
+      val wh = Files.createTempDirectory("graft-wh").toString
+      writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-01T12:00:00.000Z", people)
+      writeZoe(dir)
+      val storage = new CountingMetaStorage(MetaStorage.forUrl(spark, metaUrl(backend, wh)))
+      val meta = new MetaStore(spark, storage)
+      val targets = new TargetStore(spark, s"$wh/tables")
+      val tables = Seq(meta.SpreadsheetsTable, meta.EtlJobsTable)
+      // one tick as EtlMain runs it: (sheets loaded, reads per table,
+      // replaces per table)
+      def tick(): (Int, Seq[Int], Seq[Int]) = {
+        val reads = tables.map(storage.reads)
+        val replaces = tables.map(storage.replaces)
+        val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+        tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+        meta.setUpAccounting()
+        tasks.findSomeUpdatedSpreadsheets()
+        val loaded = tasks.loadSomeUpdatedSpreadsheets()
+        assert(tasks.verifyOldestSpreadsheet())
+        (loaded.size, tables.map(storage.reads).zip(reads).map { case (a, b) => a - b },
+          tables.map(storage.replaces).zip(replaces).map { case (a, b) => a - b })
+      }
+      // cold: setUpAccounting's empty writes fill the copy, so no read
+      assert(tick() == ((2, Seq(0, 0), Seq(3, 3))))
+      assert(tick() == ((0, Seq(1, 1), Seq(2, 0)))) // idle
+      writeZoe(dir, "2026-05-06T00:00:00.000Z", "Zed")
+      assert(tick() == ((1, Seq(1, 1), Seq(2, 1)))) // delta
+      assert(targets.read("zoe").select("name").collect().map(_.getString(0)).toSeq == Seq("Zed"))
+    }
+
+    test(s"[$backend] a replace that throws leaves the next call reading storage") {
+      var crashing: CrashingMetaStorage = null
+      var storage: CountingMetaStorage = null
+      val (dir, _, meta, targets) = freshWorld(backend, s => {
+        crashing = new CrashingMetaStorage(s); storage = new CountingMetaStorage(crashing); storage })
+      writeZoe(dir)
+      val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+      tasks.findSomeUpdatedSpreadsheets()
+      crashing.jobReplacesLeft = 0 // the job-row write throws before any load
+      intercept[IllegalStateException] { tasks.loadSomeUpdatedSpreadsheets() }
+      val reads = Seq(meta.SpreadsheetsTable, meta.EtlJobsTable).map(storage.reads)
+      crashing.jobReplacesLeft = Int.MaxValue
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(peopleCfg, zoeCfg))
+      // the failed table is read again; the other keeps its copy
+      assert(Seq(meta.SpreadsheetsTable, meta.EtlJobsTable).map(storage.reads) ==
+        Seq(reads(0), reads(1) + 1))
+      assert(meta.etlJobs.collect().map(_.id).toSet == Set(1L, 2L))
+      assert(meta.etlJobs.collect().forall(_.raw_columns_rows_hash.nonEmpty))
     }
 
     test(s"[$backend] a load that throws part way commits the sheets before it") {
@@ -312,6 +366,12 @@ class EtlPipelineSpec extends AnyFunSuite {
       assert(e.getMessage.contains("Required column not found: Nope"))
       assert(e.getMessage.contains(s"https://docs.google.com/spreadsheets/d/$Sid"))
     }
+  }
+
+  test("the accounting schemas are the case classes' encoder schemas") {
+    // the snapshot files keep the layout the Dataset encoder wrote
+    assert(SpreadsheetSeen.schema == Encoders.product[SpreadsheetSeen].schema)
+    assert(EtlJobRow.schema == Encoders.product[EtlJobRow].schema)
   }
 
   test("two config entries for one (spreadsheet, sheet) are rejected") {

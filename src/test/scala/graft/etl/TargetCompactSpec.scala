@@ -1,8 +1,10 @@
 package graft.etl
 
 import graft.SparkTestSession
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Target-table compaction (the EtlMain `--compact` verb): a table
   * fragmented by repeated per-job partition overwrites rewrites to one
@@ -17,6 +19,11 @@ class TargetCompactSpec extends AnyFunSuite {
     import spark.implicits._
     store.read(t).select("_origin_etl_job_id", "_origin_row", "a")
       .as[(Long, Long, String)].collect().toSet
+  }
+
+  private def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
   }
 
   test("compact merges per-job fragments, keeps rows and the partition layout") {
@@ -62,6 +69,55 @@ class TargetCompactSpec extends AnyFunSuite {
     val got = store.read("t").select("_origin_etl_job_id", "a", "b")
       .as[(Long, String, Option[String])].collect().toSet
     assert(got == Set((1L, "old", None), (2L, "new", Some("b0"))))
+  }
+
+  test("a crash inside compact's swap: the rerun restores the lost partition from the complete stage") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-tcompact-crash").toString
+    val store = new TargetStore(spark, root)
+    store.replaceJobPartition("t",
+      (0 until 300).map(i => (1L, i.toLong, s"v$i"))
+        .toDF("_origin_etl_job_id", "_origin_row", "a").repartition(3))
+    store.replaceJobPartition("t",
+      (0 until 20).map(i => (2L, i.toLong, s"w$i"))
+        .toDF("_origin_etl_job_id", "_origin_row", "a").repartition(2))
+    store.replaceJobPartition("t",
+      Seq((3L, 0L, "x0")).toDF("_origin_etl_job_id", "_origin_row", "a"))
+    val expected = rows(store, "t")
+
+    // the crash state: a complete stage (with its _SUCCESS), and the swap
+    // stopped after deleting job 1's partition, before renaming its
+    // staged copy in
+    store.read("t").repartition(col("_origin_etl_job_id"))
+      .write.partitionBy("_origin_etl_job_id").parquet(store.compactStage("t"))
+    deleteTree(Paths.get(store.path("t"), "_origin_etl_job_id=1"))
+    // job 3 is reloaded before the rerun: the stage's older rows must
+    // not overwrite it
+    store.replaceJobPartition("t",
+      Seq((3L, 0L, "x0-reloaded")).toDF("_origin_etl_job_id", "_origin_row", "a"))
+
+    store.compact("t")
+    assert(rows(store, "t") ==
+      expected.filter(_._1 != 3L) + ((3L, 0L, "x0-reloaded")))
+    assert(store.dataFileCount("t") == 3L)
+    assert(!Files.exists(Paths.get(store.compactStage("t"))))
+  }
+
+  test("compact discards an incomplete stage (no _SUCCESS)") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-tcompact-partial").toString
+    val store = new TargetStore(spark, root)
+    store.replaceJobPartition("t",
+      (0 until 10).map(i => (1L, i.toLong, s"v$i"))
+        .toDF("_origin_etl_job_id", "_origin_row", "a").repartition(2))
+    val expected = rows(store, "t")
+    // a stage write that crashed: rows of a job the table never had
+    Seq((9L, 0L, "junk")).toDF("_origin_etl_job_id", "_origin_row", "a")
+      .write.partitionBy("_origin_etl_job_id").parquet(store.compactStage("t"))
+    Files.delete(Paths.get(store.compactStage("t"), "_SUCCESS"))
+    assert(store.compact("t") == ((2L, 1L)))
+    assert(rows(store, "t") == expected)
+    assert(!Files.exists(Paths.get(store.compactStage("t"))))
   }
 
   test("the --compact verb reports per-table outcomes and skips absent tables") {

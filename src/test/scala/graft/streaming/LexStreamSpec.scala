@@ -736,6 +736,32 @@ class LexStreamSpec extends AnyFunSuite {
       .contains(9L))
   }
 
+  test("a both-markers crash window resolves by write sequence, not mtime: a shrink at equal mtimes reads the newer, lower value") {
+    val imp = Files.createTempDirectory("graft-impmarker-seq").toString
+    val f = new org.apache.hadoop.fs.Path(imp)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def names = f.listStatus(new org.apache.hadoop.fs.Path(s"$imp/_scalars"))
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
+    LexStream.writeScalars(spark, imp, 4L, 64L)
+    LexStream.writeScalars(spark, imp, 4L, 128L) // K grows: sequence 1
+    assert(names == Set("_a=4", "_k=1-128"))
+    // a rebuild shrinking K to 32 crashes between create-new (sequence 2)
+    // and delete-stale; both markers carry one mtime
+    val stale = new org.apache.hadoop.fs.Path(s"$imp/_scalars/_k=1-128")
+    val fresh = new org.apache.hadoop.fs.Path(s"$imp/_scalars/_k=2-32")
+    f.create(fresh, true).close()
+    val t0 = f.getFileStatus(fresh).getModificationTime
+    f.setTimes(stale, t0, -1)
+    assert(LexStream.readMarker(spark, imp, LexStream.KPrefix).contains(32L))
+    // nor does a newer mtime on the stale marker win
+    f.setTimes(stale, t0 + 60000L, -1)
+    assert(LexStream.readMarker(spark, imp, LexStream.KPrefix).contains(32L))
+    // the next completed write keeps the marker in force and heals the window
+    LexStream.writeScalars(spark, imp, 4L, 32L)
+    assert(names == Set("_a=4", "_k=2-32"))
+    assert(LexStream.readMarker(spark, imp, LexStream.KPrefix).contains(32L))
+  }
+
   test("the serve takes the query side as a collected literal — no tokenize subtree in the main action (r21)") {
     val lex = foldFixture()
     val served = LexStream.lexTopDocs(spark, lex, fixtureQueries())
