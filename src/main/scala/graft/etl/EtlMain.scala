@@ -177,7 +177,7 @@ object EtlMain {
     val ok = tasks.verifyOldestSpreadsheet()
     println(s"[graft-etl] access audit: ${if (ok) "ok" else "INACCESSIBLE"}")
     loaded.map(_.targetTable).distinct.foreach { t =>
-      println(s"[graft-etl] $t now has ${targets.read(t).count()} row(s)")
+      println(s"[graft-etl] $t now has ${targets.rowCount(t)} row(s)")
     }
   }
 

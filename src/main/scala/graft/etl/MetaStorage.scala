@@ -11,6 +11,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Type
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
 import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -21,11 +22,13 @@ import scala.util.Using
   *
   * A backend provides whole-table read and atomic replace; the accounting
   * logic is in [[MetaStore]]. The tables are metadata-scale (one row per
-  * spreadsheet or job), so both backends do their I/O on the driver and
-  * launch no Spark job: [[read]] returns the rows as a local relation, and
-  * [[replace]] collects its input. Target DATA always goes through
-  * [[TargetStore]]'s distributed writes. Two backends ship, mirroring the
-  * reference's two agents:
+  * spreadsheet or job), so both backends do their I/O on the driver over
+  * plain rows: [[readRows]] and [[replaceRows]] hold the I/O and build no
+  * `DataFrame`, run no Spark plan and launch no Spark job, and they are the
+  * only forms [[MetaStore]]'s tick calls. [[read]] and [[replace]] are the
+  * `DataFrame` adapters over them, for callers that want a Spark view.
+  * Target DATA always goes through [[TargetStore]]'s distributed writes.
+  * Two backends ship, mirroring the reference's two agents:
   *
   *   - [[SnapshotMetaStorage]] — durable parquet snapshot directories with
   *     write-temp-then-rename replace (the "mysql" role: the real
@@ -37,7 +40,7 @@ import scala.util.Using
   */
 trait MetaStorage {
 
-  /** True when the table has been created (by a prior [[replace]]). */
+  /** True when the table has been created (by a prior replace). */
   def exists(table: String): Boolean
 
   /** Read the current contents with the given (authoritative) schema. */
@@ -48,6 +51,18 @@ trait MetaStorage {
     * becomes unreachable — the no-read-while-overwrite contract.
     */
   def replace(table: String, df: DataFrame): Unit
+
+  /** [[read]] as driver rows. Each row carries `schema`, so it answers
+    * `getAs` by field name. The default adapts [[read]]; the shipped
+    * backends override it and run no Spark plan. */
+  def readRows(table: String, schema: StructType): Seq[Row] =
+    read(table, schema).collect().toSeq
+
+  /** [[replace]] from driver rows, in `schema`'s field order. The default
+    * adapts [[replace]]; the shipped backends override it and run no Spark
+    * plan. */
+  def replaceRows(table: String, schema: StructType, rows: Seq[Row]): Unit =
+    replace(table, SparkSession.active.createDataFrame(rows.asJava, schema))
 }
 
 object MetaStorage {
@@ -83,6 +98,16 @@ object MetaStorage {
         throw new IllegalArgumentException(
           s"Unexpected driver: ${other.takeWhile(_ != ':')}")
     }
+
+  /** Refuses a column type other than bigint and string: the only types of
+    * the accounting schemas, and all the snapshot store writes. Both
+    * backends check, so a schema that runs on one runs on the other. */
+  private[etl] def requireSupported(schema: StructType): Unit =
+    schema.fields.find(f => f.dataType != LongType && f.dataType != StringType).foreach { f =>
+      throw new IllegalArgumentException(
+        s"Accounting column ${f.name} has unsupported type ${f.dataType.simpleString}; " +
+          "the accounting store holds only bigint and string columns")
+    }
 }
 
 /** Durable parquet-snapshot backend: each table is a directory of parquet
@@ -90,11 +115,12 @@ object MetaStorage {
   * driver through parquet-hadoop, so no call launches a Spark job; the
   * format, the paths and the rename protocol are those of a Spark
   * `repartition(1).write.parquet` snapshot, and either side reads the
-  * other's files. [[read]] is eager: it returns the rows already read.
+  * other's files. [[read]] and [[replace]] adapt the row forms: [[read]]
+  * wraps the rows already read, [[replace]] collects its input first.
   * Columns must be `LongType` or `StringType`, the only types of the
   * accounting schemas.
   *
-  * A crash between the two renames of [[replace]] leaves only
+  * A crash between the two renames of [[replaceRows]] leaves only
   * `<table>.old`; every entry point first renames it back, so the last
   * committed snapshot survives (an uncommitted `.tmp` is discarded by the
   * next replace, and the §7.4 ordering makes that an idempotent redo).
@@ -125,29 +151,29 @@ final class SnapshotMetaStorage(
     * Spark skips `_SUCCESS` and `.crc`), mapping columns by name; an absent
     * column or a null cell reads as null. A snapshot with no part file is
     * an empty table. */
-  override def read(table: String, schema: StructType): DataFrame = {
-    schema.fields.foreach(parquetField) // rejects an unsupported type, as replace does
+  override def readRows(table: String, schema: StructType): Seq[Row] = {
+    MetaStorage.requireSupported(schema)
     val parts = fs.listStatus(live(table)).map(_.getPath).filter { p =>
       val name = p.getName
       name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
     }.sortBy(_.getName)
-    val rows = parts.toSeq.flatMap { part =>
+    parts.toSeq.flatMap { part =>
       Using.resource(ParquetReader.builder(new GroupReadSupport, part).withConf(conf).build()) {
         reader => Iterator.continually(reader.read()).takeWhile(_ != null)
-          .map(g => Row.fromSeq(schema.fields.toSeq.map(cell(g, _)))).toVector
+          .map(g => new GenericRowWithSchema(schema.fields.map(cell(g, _)), schema)).toVector
       }
     }
-    spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** Collects `df` (which may read the current snapshot) before the old
-    * snapshot is replaced — no read-while-overwrite hazard — then writes
-    * one part file into a cleared `.tmp` and swaps it in by renames. An
-    * unsupported column type throws before anything is written. */
-  override def replace(table: String, df: DataFrame): Unit = {
-    val schema = df.schema
+  override def read(table: String, schema: StructType): DataFrame =
+    spark.createDataFrame(readRows(table, schema).asJava, schema)
+
+  /** Writes `rows` as one part file into a cleared `.tmp` and swaps it in
+    * by renames. An unsupported column type throws before anything is
+    * written. */
+  override def replaceRows(table: String, schema: StructType, rows: Seq[Row]): Unit = {
+    MetaStorage.requireSupported(schema)
     val fileSchema = new MessageType("spark_schema", schema.fields.map(parquetField): _*)
-    val rows = df.collect()
     val dst = live(table)
     val tmp = new Path(tablePath(table) + ".tmp")
     val old = new Path(tablePath(table) + ".old")
@@ -170,18 +196,17 @@ final class SnapshotMetaStorage(
     fs.delete(old, true)
   }
 
-  /** The parquet column Spark writes for `f`: a non-nullable field is
-    * `required`, a nullable one `optional`. */
+  /** Collects `df` (which may read the current snapshot) before the old
+    * snapshot is replaced: no read-while-overwrite hazard. */
+  override def replace(table: String, df: DataFrame): Unit =
+    replaceRows(table, df.schema, df.collect().toSeq)
+
+  /** The parquet column Spark writes for `f`, a bigint or string column: a
+    * non-nullable field is `required`, a nullable one `optional`. */
   private def parquetField(f: StructField): Type = {
     val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-    f.dataType match {
-      case LongType => Types.primitive(INT64, rep).named(f.name)
-      case StringType =>
-        Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
-      case t => throw new IllegalArgumentException(
-        s"Accounting column ${f.name} has unsupported type ${t.simpleString}; " +
-          "the snapshot store holds only bigint and string columns")
-    }
+    if (f.dataType == LongType) Types.primitive(INT64, rep).named(f.name)
+    else Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
   }
 
   private def cell(g: Group, f: StructField): Any = {
@@ -197,29 +222,37 @@ final class SnapshotMetaStorage(
 }
 
 /** Driver-held backend for tests / dry runs (the reference's
-  * `sqlite::memory:` role). Replace collects eagerly — the same
-  * materialize-before-swap ordering as the snapshot backend — which is
-  * correct because accounting tables are metadata-scale by contract.
+  * `sqlite::memory:` role). [[replaceRows]] keeps the rows it is given,
+  * materialized before the swap like the snapshot backend's rename, and
+  * [[replace]] collects its input first, which is correct because
+  * accounting tables are metadata-scale by contract. [[readRows]] maps the
+  * stored columns to the asked schema by name, an absent one as null.
   */
 final class InMemoryMetaStorage(spark: SparkSession) extends MetaStorage {
 
   private val tables =
-    scala.collection.mutable.Map.empty[String, (StructType, Seq[Row])]
+    scala.collection.mutable.Map.empty[String, (StructType, Vector[Row])]
 
   override def exists(table: String): Boolean = synchronized {
     tables.contains(table)
   }
 
-  override def read(table: String, schema: StructType): DataFrame =
-    synchronized {
-      tables.get(table) match {
-        case Some((sch, rows)) => spark.createDataFrame(rows.asJava, sch)
-        case None => spark.createDataFrame(Seq.empty[Row].asJava, schema)
-      }
-    }
-
-  override def replace(table: String, df: DataFrame): Unit = {
-    val materialized = df.collect().toSeq // before the swap, like the rename
-    synchronized { tables(table) = (df.schema, materialized) }
+  override def readRows(table: String, schema: StructType): Seq[Row] = {
+    MetaStorage.requireSupported(schema)
+    val (stored, rows) = synchronized { tables.getOrElse(table, (schema, Vector.empty)) }
+    val at = schema.fieldNames.map(stored.fieldNames.indexOf(_))
+    rows.map(r => new GenericRowWithSchema(at.map(i => if (i < 0) null else r.get(i)), schema))
   }
+
+  override def read(table: String, schema: StructType): DataFrame =
+    spark.createDataFrame(readRows(table, schema).asJava, schema)
+
+  override def replaceRows(table: String, schema: StructType, rows: Seq[Row]): Unit = {
+    MetaStorage.requireSupported(schema)
+    val materialized = rows.toVector // before the swap, like the rename
+    synchronized { tables(table) = (schema, materialized) }
+  }
+
+  override def replace(table: String, df: DataFrame): Unit =
+    replaceRows(table, df.schema, df.collect().toSeq)
 }

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** `__meta_spreadsheets` row (SURVEY.md §1.1.2; reference:
   * src/DatabaseAgentMysql.php:98-106). `google_modified` is an RFC 3339
@@ -70,10 +69,12 @@ object EtlJobRow {
   * Both tables are metadata-scale: one row per tracked spreadsheet and one
   * per configured (spreadsheet, sheet). Every operation is the reference's
   * small SQL upsert or lookup (src/DatabaseAgentMysql.php:24-230), decided
-  * in process over plain case-class rows, with no Spark job; a method hands
-  * each table it changes to [[MetaStorage.replace]] at most once. Physical
-  * storage stays behind the [[MetaStorage]] trait (R27), so the same
-  * semantics run on any backend.
+  * in process over plain case-class rows, with no Spark plan: the tick moves
+  * rows to and from storage only through [[MetaStorage.readRows]] and
+  * [[MetaStorage.replaceRows]], and a method hands each table it changes to
+  * [[MetaStorage.replaceRows]] at most once. Physical storage stays behind
+  * the [[MetaStorage]] trait (R27), so the same semantics run on any
+  * backend.
   *
   * Tick-scoped copy: the store keeps one in-memory copy of each table. The
   * first use of a table reads it from storage; a replace that returns sets
@@ -117,14 +118,14 @@ final class MetaStore(spark: SparkSession, storage: MetaStorage) {
     private var copy: Option[Vector[T]] = None
 
     def rows: Vector[T] = copy.getOrElse {
-      val read = storage.read(name, schema).collect().iterator.map(fromRow).toVector
+      val read = storage.readRows(name, schema).iterator.map(fromRow).toVector
       copy = Some(read)
       read
     }
 
     def replace(rows: Seq[T]): Unit = {
       copy = None // stays dropped if the replace throws
-      storage.replace(name, spark.createDataFrame(rows.map(toRow).asJava, schema))
+      storage.replaceRows(name, schema, rows.map(toRow))
       copy = Some(rows.toVector)
     }
 

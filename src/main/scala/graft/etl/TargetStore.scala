@@ -39,13 +39,21 @@ final class TargetStore(
   /** Load one job's rows (R21–R23): `rows` are post-skip, null-padded,
     * all-string projections; `columnNames` are the already-normalized output
     * names (R12). `_origin_row` is the 0-based post-skip position
-    * (SURVEY.md §7.4) — assigned here from the grid's row order.
+    * (SURVEY.md §7.4) — assigned here from the grid's row order. With no
+    * rows the job's partition directory is deleted: a dynamic overwrite of
+    * an empty frame replaces no partition, and the reference's
+    * delete-then-insert leaves the job with no rows.
     */
   def loadJobRows(
       targetTable: String,
       jobId: Long,
       columnNames: Seq[String],
       rows: Seq[Seq[Option[String]]]): Unit = {
+    if (rows.isEmpty) {
+      val part = new Path(path(targetTable), s"_origin_etl_job_id=$jobId")
+      part.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(part, true)
+      return
+    }
     val schema = StructType(
       StructField("_origin_etl_job_id", LongType, nullable = false) +:
       StructField("_origin_row", LongType, nullable = false) +:
@@ -54,11 +62,11 @@ final class TargetStore(
       Row.fromSeq(jobId +: i.toLong +: r.map(_.orNull))
     }
     // Grids are driver-bounded (Sheets API model); parallelize suffices.
-    // `rowsPerChunk` sets the write fan-out for big sheets (one file per
-    // chunk in the job's partition — the fragmentation `compact` repairs).
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(sparkRows.toSeq, math.max(1, rows.size / rowsPerChunk + 1)),
-      schema)
+    // `rowsPerChunk` sets the write fan-out for big sheets: one file per
+    // chunk of at most `rowsPerChunk` rows in the job's partition (the
+    // fragmentation `compact` repairs).
+    val chunks = math.max(1, math.ceil(rows.size.toDouble / rowsPerChunk).toInt)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(sparkRows.toSeq, chunks), schema)
     replaceJobPartition(targetTable, df)
   }
 
@@ -75,6 +83,11 @@ final class TargetStore(
   /** Read a target table with additive schema merged across partitions. */
   def read(targetTable: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path(targetTable))
+
+  /** Rows in a target table; 0 for a table with no data file, which
+    * [[read]] cannot infer a schema for (only header-only sheets loaded). */
+  def rowCount(targetTable: String): Long =
+    if (dataFileCount(targetTable) == 0) 0L else read(targetTable).count()
 
   /** In-place small-file compaction of a target table (the EtlMain
     * `--compact` maintenance verb): every `_origin_etl_job_id` partition
@@ -99,7 +112,8 @@ final class TargetStore(
     * uncompacted with the same rows or reloaded since, and must not be
     * overwritten with staged rows), an incomplete stage is deleted.
     * Between a crash and the next run the lost partition reads as empty.
-    * Returns (files before, files after).
+    * A table with no data file (its jobs all reloaded empty) is left as it
+    * is. Returns (files before, files after).
     */
   def compact(targetTable: String): (Long, Long) = {
     val p = path(targetTable)
@@ -116,6 +130,7 @@ final class TargetStore(
         }
     fs.delete(stage, true)
     val before = dataFileCount(targetTable)
+    if (before == 0) return (0L, 0L) // every job emptied: no schema to read
     read(targetTable)
       // one shuffle keyed on the partition column: each job's rows land
       // whole in one task, so partitionBy emits exactly one file per job

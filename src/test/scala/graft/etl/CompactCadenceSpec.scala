@@ -96,6 +96,17 @@ class CompactCadenceSpec extends AnyFunSuite {
       (0 until 5).map(i => s"a9-r$i").toSet)
   }
 
+  test("a load writes ceil(rows / rowsPerChunk) chunk files") {
+    val wh = Files.createTempDirectory("graft-chunks").toString
+    val targets = new TargetStore(spark, wh, rowsPerChunk = 2)
+    for ((rows, files) <- Seq(1 -> 1L, 2 -> 1L, 4 -> 2L, 5 -> 3L)) {
+      val t = s"t$rows"
+      targets.loadJobRows(t, 1L, Seq("a"), (0 until rows).map(i => Seq(Some(s"r$i"))))
+      assert(targets.dataFileCount(t) == files, s"$rows rows")
+      assert(targets.read(t).count() == rows)
+    }
+  }
+
   test("idle batches never advance the cadence counter") {
     val wh = Files.createTempDirectory("graft-cadence-idle").toString
     val targets = new TargetStore(spark, s"$wh/tables")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Counts `read` and `replace` calls per accounting table. */
 private final class CountingMetaStorage(inner: MetaStorage) extends MetaStorage {
@@ -348,6 +349,64 @@ class EtlPipelineSpec extends AnyFunSuite {
       assert(contents(targets) == clean)
     }
 
+    test(s"[$backend] an idle tick runs no SQL execution: accounting moves driver rows") {
+      val (dir, _, meta, targets) = freshWorld(backend)
+      writeZoe(dir)
+      // one tick as EtlMain runs it; returns the sheets loaded
+      def tick(): Int = {
+        val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+        tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+        meta.setUpAccounting()
+        tasks.findSomeUpdatedSpreadsheets()
+        val loaded = tasks.loadSomeUpdatedSpreadsheets()
+        assert(tasks.verifyOldestSpreadsheet())
+        loaded.size
+      }
+      assert(tick() == 2)
+      // the idle tick still reads and replaces both accounting tables
+      assert(sparkWorkOf(tick()) == ((0, 0, 0)))
+    }
+
+    test(s"[$backend] a sheet emptied of data rows loses its rows; the other job's files stay") {
+      val (dir, tasks, _, targets) = freshWorld(backend)
+      writeZoe(dir)
+      writeFixture(dir, "c.json", Sid3, "Sheet1", "2026-05-05T00:00:00.000Z", Seq(Seq("Name")))
+      val yanCfg = EtlConfig(Sid3, "Sheet1", "yan", Seq("name" -> Right("Name")))
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg.copy(targetTable = "renewals_2019"), yanCfg))
+      tasks.findSomeUpdatedSpreadsheets()
+      assert(tasks.loadSomeUpdatedSpreadsheets().size == 3)
+      val table = Paths.get(targets.path("renewals_2019"))
+      // job id -> its partition's files as (name, size, mtime)
+      def files(job: Long): Set[(String, Long, Long)] = {
+        val part = table.resolve(s"_origin_etl_job_id=$job")
+        if (!Files.isDirectory(part)) Set.empty
+        else {
+          val s = Files.list(part)
+          try s.iterator().asScala.map(f => (f.getFileName.toString, Files.size(f),
+            Files.getLastModifiedTime(f).toMillis)).toSet
+          finally s.close()
+        }
+      }
+      val zoeFiles = files(2)
+      assert(files(1).nonEmpty && zoeFiles.nonEmpty)
+      assert(targets.rowCount("renewals_2019") == 4)
+      // a header-only first load leaves no row and no data file
+      assert(targets.rowCount("yan") == 0)
+
+      // the reload of a header-only grid leaves job 1 with no row
+      writeFixture(dir, "a.json", Sid, "2019 Expirations", "2026-05-06T00:00:00.000Z", people.take(1))
+      tasks.findSomeUpdatedSpreadsheets()
+      assert(tasks.loadSomeUpdatedSpreadsheets() == Seq(peopleCfg))
+      val rows = targets.read("renewals_2019")
+        .selectExpr("CAST(_origin_etl_job_id AS BIGINT)", "name")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(rows == Set((2L, "Zoe")))
+      assert(files(1).isEmpty)
+      assert(files(2) == zoeFiles)
+      assert(targets.rowCount("renewals_2019") == 1)
+      assert(tasks.loadSomeUpdatedSpreadsheets().isEmpty) // the empty load committed
+    }
+
     test(s"[$backend] verifyOldestSpreadsheet: refresh on success, false when inaccessible (R30)") {
       val (dir, tasks, meta, _) = freshWorld(backend)
       tasks.findSomeUpdatedSpreadsheets()
@@ -426,23 +485,32 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(metaB.spreadsheets.collect().map(_.google_spreadsheet_id).toSeq == Seq(Sid2))
   }
 
-  /** Spark jobs `body` launches, counted under a job group of its own. */
-  private def sparkJobsOf[T](body: => T): (T, Int) = {
+  /** Spark jobs and SQL executions `body` starts, counted under a job
+    * group of its own. */
+  private def sparkWorkOf[T](body: => T): (T, Int, Int) = {
     val group = s"etl-tick-${System.nanoTime()}"
     @volatile var jobs = 0
+    @volatile var executions = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) jobs += 1
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if x.jobGroupId.contains(group) => executions += 1
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "ETL tick under test")
     try {
       val result = body
-      // listener delivery is async — poll until the count is stable
-      var last = -1
+      // listener delivery is async — poll until the counts are stable
+      var last = (-1, -1)
       var spins = 0
-      while (jobs != last && spins < 50) { last = jobs; Thread.sleep(100); spins += 1 }
-      (result, jobs)
+      while ((jobs, executions) != last && spins < 50) {
+        last = (jobs, executions); Thread.sleep(100); spins += 1
+      }
+      (result, jobs, executions)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
@@ -461,10 +529,11 @@ class EtlPipelineSpec extends AnyFunSuite {
       tasks.verifyOldestSpreadsheet()
       loaded.size
     }
-    val (loaded, coldJobs) = sparkJobsOf(tick())
+    val (loaded, coldJobs, _) = sparkWorkOf(tick())
     assert(loaded == 2)
     assert(coldJobs <= loaded, s"cold tick launched $coldJobs jobs for $loaded sheets")
-    assert(sparkJobsOf(tick()) == ((0, 0)))
+    val (idleLoaded, idleJobs, _) = sparkWorkOf(tick())
+    assert((idleLoaded, idleJobs) == ((0, 0)))
   }
 
   test("[snapshot] a crash between replace's renames keeps the cursor and job ids") {

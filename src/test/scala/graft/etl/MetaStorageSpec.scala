@@ -2,15 +2,18 @@ package graft.etl
 
 import graft.SparkTestSession
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** [[SnapshotMetaStorage]] on disk: its driver-side parquet files and Spark's
   * parquet writer/reader read each other's snapshots, every crash prefix of
   * [[SnapshotMetaStorage.replace]] recovers to a whole snapshot, and an
-  * unsupported column type is refused before anything is written.
+  * unsupported column type is refused before anything is written. On both
+  * backends, the row forms and the `DataFrame` forms read each other's
+  * writes.
   */
 class MetaStorageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -117,6 +120,67 @@ class MetaStorageSpec extends AnyFunSuite {
       assert(rowsOf(reopened.read(Table, schema)) == v3)
       assert(rowsOf(spark.read.schema(schema).parquet(live)) == v3)
       assert(!Files.exists(Paths.get(s"$live.tmp")) && !Files.exists(Paths.get(s"$live.old")))
+    }
+  }
+
+  private def backend(name: String): MetaStorage = name match {
+    case "snapshot" => fresh()
+    case "memory" => new InMemoryMetaStorage(spark)
+  }
+
+  for (name <- Seq("snapshot", "memory")) {
+
+    test(s"[$name] readRows rows answer getAs by field name") {
+      val storage = backend(name)
+      storage.replace(Table, v2.toDF())
+      val rows = storage.readRows(Table, schema)
+      assert(rows.forall(_.schema == schema))
+      assert(rows.map(_.getAs[String]("sheet_name")) == v2.map(_.sheet_name))
+      assert(rows.map(EtlJobRow.fromRow) == v2)
+    }
+
+    test(s"[$name] a table written by replace reads back equal through readRows") {
+      val storage = backend(name)
+      for (rows <- Seq(v2, Nil, v3)) {
+        storage.replace(Table, rows.toDF())
+        assert(storage.readRows(Table, schema).map(EtlJobRow.fromRow) == rows)
+      }
+    }
+
+    test(s"[$name] a table written by replaceRows reads back equal through read") {
+      val storage = backend(name)
+      for (rows <- Seq(v2, Nil, v3)) {
+        storage.replaceRows(Table, schema, rows.map(EtlJobRow.toRow))
+        assert(storage.exists(Table))
+        assert(rowsOf(storage.read(Table, schema)) == rows)
+        storage match {
+          case s: SnapshotMetaStorage =>
+            assert(rowsOf(spark.read.schema(schema).parquet(s.tablePath(Table))) == rows)
+          case _ =>
+        }
+      }
+    }
+
+    test(s"[$name] replaceRows refuses an unsupported column type before it writes anything") {
+      val storage = backend(name)
+      storage.replaceRows(Table, schema, v1.map(EtlJobRow.toRow))
+      val before = storage match {
+        case s: SnapshotMetaStorage => names(s.tablePath(Table))
+        case _ => Set.empty[String]
+      }
+      val bad = schema.add("score", DoubleType)
+      val e = intercept[IllegalArgumentException] {
+        storage.replaceRows(Table, bad, v2.map(j => Row.fromSeq(EtlJobRow.toRow(j).toSeq :+ 0.5)))
+      }
+      assert(e.getMessage.contains("score"), e.getMessage)
+      storage match {
+        case s: SnapshotMetaStorage =>
+          val live = s.tablePath(Table)
+          assert(!Files.exists(Paths.get(s"$live.tmp")) && !Files.exists(Paths.get(s"$live.old")))
+          assert(names(live) == before)
+        case _ =>
+      }
+      assert(storage.readRows(Table, schema).map(EtlJobRow.fromRow) == v1)
     }
   }
 

@@ -120,6 +120,17 @@ class TargetCompactSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(store.compactStage("t"))))
   }
 
+  test("compact of a table whose only job was emptied writes nothing") {
+    val root = Files.createTempDirectory("graft-tcompact-emptied").toString
+    val store = new TargetStore(spark, root, rowsPerChunk = 2)
+    store.loadJobRows("t", 1L, Seq("a"), (0 until 3).map(i => Seq(Some(s"v$i"))))
+    store.loadJobRows("t", 1L, Seq("a"), Nil)
+    assert(store.exists("t") && store.dataFileCount("t") == 0L)
+    assert(store.compact("t") == ((0L, 0L)))
+    assert(store.rowCount("t") == 0L)
+    assert(!Files.exists(Paths.get(store.compactStage("t"))))
+  }
+
   test("the --compact verb reports per-table outcomes and skips absent tables") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-tcompact-verb").toString
