@@ -112,16 +112,20 @@ object Bucketing {
     spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$name`")
   }
 
-  /** Per-table-name staging locks — the one-time concurrency audit the
-    * parallel card-member construction needs (r22, guide §2.6): every
-    * `ensure*` staging function is check-then-create
-    * (`if (!tableExists(t)) stage`), which is racy the moment two
-    * member DERIVATIONS build on separate driver threads — both could
-    * see !exists on the warmup pass and CTAS the same name. Ensures
-    * wrap their body in `withStageLock(name)` with the existence check
-    * INSIDE (double-checked): creation runs exactly once per name, the
+  /** Per-table-name staging locks. An `ensure*` staging function is
+    * check-then-create (`if (!tableExists(t)) stage`), which is racy
+    * the moment two callers build on separate driver threads (parallel
+    * card-member construction, or concurrent `spark.sql` statements
+    * naming the `graft_*` serve table functions) — both could see
+    * !exists and CTAS the same name. The locked ensures —
+    * `TextAnalysis.ensureQuerySample`, `ensureLexIndex`,
+    * `ensureImpactIndex`, `ensurePosIndex` and
+    * `Similarity.ensureIvfPqIndex` — wrap their body in
+    * `withStageLock(name)` with the existence check INSIDE
+    * (double-checked): creation runs exactly once per name, the
     * post-staging steady state pays one uncontended lock + catalog
     * lookup. Locks are per-name, so independent stagings still overlap.
+    * The other ensures still check and create without a lock.
     */
   private val stageLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]

@@ -1,11 +1,14 @@
 package graft
 
 import graft.functions.{BloomBitsAgg, HyperplaneBands, MinHashAffine, SimHash32, VecDot, VecDotMany}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Session extensions registering the engine's native functions for SQL
   * users (`spark.sql.extensions=graft.GraftExtensions`):
@@ -16,6 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   *   SELECT hyperplane_bands(embedding, array(...), 20, 6) FROM ...
   *   SELECT minhash_affine(hashes, array(...), array(...), p) FROM ...
   *   SELECT bloom_bits(positions, 64) FROM ... GROUP BY ...
+  *
+  * and the retrieval serves as table functions over the views
+  * [[SqlCatalog.register]] publishes ([[SqlCatalog.ServeFunctions]]):
+  *
+  *   SELECT * FROM graft_bm25('qview')
+  *   SELECT * FROM graft_phrase('qview', 3)
   *
   * Matrix / seed parameters must be FOLDABLE literals (they configure the
   * expression, mirroring the DataFrame helpers' plain-Scala arguments —
@@ -106,5 +115,69 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "bloom_bits(positions array<bigint>, words int)")
         BloomBitsAgg(children.head, int(children(1), "bloom_bits"))
       }))
+    SqlCatalog.ServeFunctions.keys.foreach { fn =>
+      ext.injectTableFunction((new FunctionIdentifier(fn),
+        new ExpressionInfo(classOf[ServeCall].getName, fn),
+        GraftExtensions.serveCall(fn) _))
+    }
+    ext.injectResolutionRule(s => new GraftExtensions.ResolveServeCalls(s))
   }
+}
+
+object GraftExtensions {
+
+  /** Resolves a call of the table function `fn`: checks its arguments
+    * (a string literal view name; for [[SqlCatalog.PhraseServes]] an
+    * optional integer literal k ≥ 2, default 2) and defers the plan to
+    * [[ResolveServeCalls]] — Spark runs this step under the session
+    * catalog's lock, and a serve's first call may stage an index.
+    */
+  private[graft] def serveCall(fn: String)(args: Seq[Expression]): LogicalPlan = {
+    val takesK = SqlCatalog.PhraseServes(fn)
+    val usage = if (takesK) s"$fn('view'[, k])" else s"$fn('view')"
+    require(args.nonEmpty && args.length <= (if (takesK) 2 else 1),
+      s"$usage: got ${args.length} arguments")
+    val view = args.head match {
+      case Literal(v: UTF8String, _: StringType) => v.toString
+      case e => throw new IllegalArgumentException(
+        s"$usage: the view must be a string literal, got ${e.sql}")
+    }
+    val k = args.lift(1).fold(2) {
+      case Literal(v: Int, IntegerType) => v
+      case e => throw new IllegalArgumentException(
+        s"$usage: k must be an integer literal, got ${e.sql}")
+    }
+    require(k >= 2, s"$fn: a phrase needs at least two tokens, got $k")
+    ServeCall(fn, view, k)
+  }
+
+  /** The analyzer rule that turns each [[ServeCall]] into its
+    * [[SqlCatalog.ServeFunctions]] plan over the dir
+    * [[SqlCatalog.register]] last published for the application
+    * (building it may run the serve's bounded driver collects, as
+    * building the Scala DataFrame does).
+    */
+  private[graft] final class ResolveServeCalls(spark: SparkSession)
+      extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
+      case c: ServeCall =>
+        val dir = SqlCatalog.current.get(spark.sparkContext.applicationId)
+        if (dir == null) throw new IllegalStateException(
+          s"${c.fn}: no corpus is published for this application; " +
+            "call SqlCatalog.register(spark, dir) first")
+        require(spark.catalog.tableExists(c.view),
+          s"${c.fn}: no table or view named '${c.view}'")
+        SqlCatalog.ServeFunctions(c.fn)(spark, dir, spark.table(c.view), c.k)
+          .queryExecution.analyzed
+    }
+  }
+}
+
+/** A `graft_*` table-function call whose serve plan
+  * [[GraftExtensions.ResolveServeCalls]] has not built yet.
+  */
+private[graft] final case class ServeCall(fn: String, view: String, k: Int)
+    extends LeafNode {
+  override def output: Seq[Attribute] = Nil
+  override lazy val resolved: Boolean = false
 }

@@ -204,7 +204,11 @@ object EtlMain {
 
   /** Split argv into positional args and `--name value` flag pairs.
     * Unknown flags are contract errors — a typo'd `--shcema` silently
-    * ignored would load into the wrong namespace.
+    * ignored would load into the wrong namespace. So are flags that
+    * cannot take effect together: `--compact` exits before any load,
+    * so it takes neither `--stream` nor `--compact-every`;
+    * `--compact-every` acts only inside `--stream`, and takes a positive
+    * integer (checked here, not after the stream has started).
     */
   private[etl] def parseArgs(args: Array[String]): (Seq[String], Map[String, String]) = {
     val pos = Seq.newBuilder[String]
@@ -221,6 +225,15 @@ object EtlMain {
         i += 2
       } else { pos += a; i += 1 }
     }
-    (pos.result(), flags.result())
+    val f = flags.result()
+    require(!f.contains("compact") ||
+        !(f.contains("stream") || f.contains("compact-every")),
+      "--compact compacts and exits without loading; it cannot be combined " +
+        "with --stream or --compact-every")
+    require(!f.contains("compact-every") || f.contains("stream"),
+      "--compact-every only acts on a --stream run")
+    f.get("compact-every").foreach(n => require(n.toIntOption.exists(_ > 0),
+      s"--compact-every takes a positive integer, got $n"))
+    (pos.result(), f)
   }
 }

@@ -1,7 +1,6 @@
 package graft.etl
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -13,7 +12,6 @@ import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for sheet grids (SURVEY.md §7.2 item 7): the
   * idiomatic-polish variant of the extract boundary, alongside the
@@ -107,22 +105,13 @@ final class GridScan(path: String, required: StructType,
   private def pushedDesc: String =
     (idEq.map("spreadsheet_id=" + _) ++ sheetEq.map("sheet_name=" + _)).mkString(", ")
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val mapper = new ObjectMapper()
-    Files.list(Paths.get(path)).iterator().asScala
-      .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val n = mapper.readTree(Files.readAllBytes(p))
-        val id = n.get("spreadsheetId").asText()
-        GridPartition(p.toString, id,
-          Option(n.get("name")).map(_.asText()).getOrElse(id),
-          n.get("sheetName").asText(), n.get("modifiedTime").asText())
-      }
+  override def planInputPartitions(): Array[InputPartition] =
+    GridFixture.all(path)
+      .map(f => GridPartition(f.file, f.id, f.name, f.sheetName, f.modifiedTime))
       // planning-time partition pruning from the pushed equality filters
       .filter(g => idEq.forall(_ == g.spreadsheetId) &&
         sheetEq.forall(_ == g.sheetName))
       .toArray[InputPartition]
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GridReaderFactory(required)
@@ -192,13 +181,9 @@ final class Dsv2GridSource(spark: org.apache.spark.sql.SparkSession, dir: String
 final class GridReader(p: GridPartition, required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[(Long, Seq[String])] = {
-    val mapper = new ObjectMapper()
-    val n = mapper.readTree(Files.readAllBytes(Paths.get(p.file)))
-    n.get("values").elements().asScala.zipWithIndex.map { case (row, i) =>
-      (i.toLong, row.elements().asScala.map(_.asText()).toSeq)
-    }
-  }
+  private val rows: Iterator[(Long, Seq[String])] =
+    GridFixture.read(Paths.get(p.file)).values.iterator.zipWithIndex
+      .map { case (row, i) => (i.toLong, row) }
   private var current: (Long, Seq[String]) = _
 
   override def next(): Boolean =

@@ -1,8 +1,9 @@
 package graft.etl
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Spreadsheet metadata as surfaced by discovery (R1/R2).
   * `modifiedTime` is an RFC 3339 *string*, ordered lexically — never a
@@ -32,35 +33,45 @@ trait GridSource {
   def grid(id: String, sheetName: String): SheetGrid
 }
 
-/** Fixture-backed source: a directory of grid JSON files in the FIXTURES.md
-  * §1 shape ({spreadsheetId, sheetName, modifiedTime, name?, values}).
-  * One file per (spreadsheet, sheet); a spreadsheet's modifiedTime is the
-  * max over its sheets' files.
+/** One grid fixture file in the FIXTURES.md §1 shape ({spreadsheetId,
+  * sheetName, modifiedTime, name?, values}); `name` defaults to the id.
   */
-final class LocalGridSource(dir: String) extends GridSource {
+final case class GridFixture(file: String, id: String, sheetName: String,
+    modifiedTime: String, name: String, values: Seq[Seq[String]])
+
+/** The one reader of the fixture shape — [[LocalGridSource]], the DSv2
+  * scan's planning and its partition reader all parse through it.
+  */
+object GridFixture {
   private val mapper = new ObjectMapper()
 
-  private final case class Fixture(
-      id: String, sheetName: String, modifiedTime: String, name: String,
-      values: Seq[Seq[String]])
+  def read(file: Path): GridFixture = {
+    val n = mapper.readTree(Files.readAllBytes(file))
+    val id = n.get("spreadsheetId").asText()
+    GridFixture(file.toString, id, n.get("sheetName").asText(),
+      n.get("modifiedTime").asText(),
+      Option(n.get("name")).map(_.asText()).getOrElse(id),
+      n.get("values").elements().asScala.map(row =>
+        row.elements().asScala.map(_.asText()).toSeq).toSeq)
+  }
 
-  private def fixtures(): Seq[Fixture] =
-    Files.list(Paths.get(dir)).iterator().asScala
-      .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val n = mapper.readTree(Files.readAllBytes(p))
-        Fixture(
-          id = n.get("spreadsheetId").asText(),
-          sheetName = n.get("sheetName").asText(),
-          modifiedTime = n.get("modifiedTime").asText(),
-          name = Option(n.get("name")).map(_.asText())
-            .getOrElse(n.get("spreadsheetId").asText()),
-          values = n.get("values").elements().asScala.map(row =>
-            row.elements().asScala.map(_.asText()).toSeq).toSeq)
-      }
+  /** Every `.json` fixture in `dir`, in file-name order. The directory
+    * stream is closed before the files are parsed: an open one holds a
+    * descriptor, and discovery lists the directory on every tick.
+    */
+  def all(dir: String): Seq[GridFixture] =
+    Using.resource(Files.list(Paths.get(dir)))(_.iterator().asScala
+        .filter(_.toString.endsWith(".json")).toSeq.sortBy(_.toString))
+      .map(read)
+}
 
+/** Fixture-backed source: a directory of [[GridFixture]] files, one per
+  * (spreadsheet, sheet); a spreadsheet's modifiedTime is the max over its
+  * sheets' files.
+  */
+final class LocalGridSource(dir: String) extends GridSource {
   private def bySpreadsheet: Seq[SpreadsheetMeta] =
-    fixtures().groupBy(_.id).map { case (id, fs) =>
+    GridFixture.all(dir).groupBy(_.id).map { case (id, fs) =>
       val latest = fs.maxBy(f => (f.modifiedTime, f.sheetName))
       SpreadsheetMeta(id, latest.modifiedTime, latest.name)
     }.toSeq
@@ -77,7 +88,7 @@ final class LocalGridSource(dir: String) extends GridSource {
     bySpreadsheet.find(_.id == id)
 
   override def grid(id: String, sheetName: String): SheetGrid = {
-    val f = fixtures().find(f => f.id == id && f.sheetName == sheetName)
+    val f = GridFixture.all(dir).find(f => f.id == id && f.sheetName == sheetName)
       .getOrElse(throw new NoSuchElementException(s"No grid fixture: $id/$sheetName"))
     SheetGrid.fromValues(f.values)
   }

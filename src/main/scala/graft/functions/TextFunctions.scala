@@ -75,9 +75,9 @@ object TextFunctions {
 
   /** The lexical family's BM25 kernel — the ONE Column statement of the
     * scoring arithmetic every Spark road calls (batch, appended, impact
-    * and stream serves; the stream standing-query scorer); the catalog
-    * SQL states the same fragments once in [[graft.SqlCatalog]], and
-    * the DuckDB oracle re-states it independently.
+    * and stream serves; the stream standing-query scorer; the
+    * `graft_*` SQL table functions, which plan those serves), and the
+    * DuckDB oracle re-states it independently.
     *
     * Scoring is Okapi BM25 (k1 = 6/5, b = 3/4) under this repo's
     * integer-exact discipline — no libm log, no float sums, every score

@@ -887,28 +887,15 @@ object Similarity {
     * RAG read shape, where a request arrives as a query STRING plus its
     * own EMBEDDING (computed by the caller's encoder, not sampled from
     * the corpus). The lexical leg is [[TextAnalysis.bm25TopDocsFor]];
-    * the semantic leg plans per-query probes from the literal vectors
-    * ([[adcServeBatchQ]] under q91's guards — an invalid/zero vector
-    * still serves lexically, the query-level single-modality posture);
+    * the semantic leg is [[adcTopDocsFor]] over the literal vectors
+    * (q91's guards — an invalid/zero vector still serves lexically, the
+    * query-level single-modality posture);
     * fusion is the shared [[rrfFuse]]. RetrievalSpec pins it equal to
     * q149 when fed the sampled documents' own (text, embedding) pairs.
     */
   def hybridTopDocsFor(s: SparkSession, dir: String,
-      queries: DataFrame): DataFrame = {
-    val lex = TextAnalysis.bm25TopDocsFor(s, dir,
-        queries.select(col("qid"), col("qtext")))
-      .select(col("qid"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val cents = kmeansCentroids(s, dir)
-    val books = pqCodebooks(s, dir)
-    val idxT = ensureIvfPqIndex(s, dir, cents, books)
-    val sem = adcServeBatchQ(s, dir,
-        graft.StagedTombstones.maskedVecs(s, dir, s.table(idxT)),
-        cents, books,
-        collectQueryVecs(queries.select(col("qid"), col("qvec"))))
-      .select(col("qid"), col("vec_id").as("doc_id"),
-        col("rnk").as("sem_rnk"))
-    rrfFuse(lex, sem)
-  }
+      queries: DataFrame): DataFrame =
+    hybridFor(s, dir, queries, TextAnalysis.bm25TopDocsFor)
 
   /** The BOUNDED external-query hybrid serve — [[hybridTopDocsFor]]
     * with the lexical leg redirected to the impact-ordered sidecar
@@ -923,20 +910,39 @@ object Similarity {
     * un-truncated impact build.
     */
   def boundedHybridTopDocsFor(s: SparkSession, dir: String,
+      queries: DataFrame): DataFrame =
+    hybridFor(s, dir, queries, TextAnalysis.impactTopDocsFor)
+
+  /** The external-query hybrids' one body: the lexical serve `lexServe`
+    * over the (qid, qtext) half fused with [[adcTopDocsFor]] over the
+    * (qid, qvec) half.
+    */
+  private def hybridFor(s: SparkSession, dir: String, queries: DataFrame,
+      lexServe: (SparkSession, String, DataFrame) => DataFrame): DataFrame =
+    rrfFuse(
+      lexServe(s, dir, queries.select(col("qid"), col("qtext")))
+        .select(col("qid"), col("doc_id"), col("rnk").as("lex_rnk")),
+      adcTopDocsFor(s, dir, queries)
+        .select(col("qid"), col("vec_id").as("doc_id"),
+          col("rnk").as("sem_rnk")))
+
+  /** The EXTERNAL-query batched ADC serve — q122 for a literal (qid
+    * BIGINT, qvec ARRAY<FLOAT|DOUBLE>) relation: per-query probes
+    * planned from the caller's vectors under q91's guards
+    * ([[collectQueryVecs]] — an invalid, zero or NaN vector serves
+    * nothing), candidates from the takedown-masked staged IVF-PQ index,
+    * the (qid; adc, vec_id) top-10 cut. The semantic leg of both
+    * external-query hybrids; `graft_adc` serves it in SQL.
+    */
+  def adcTopDocsFor(s: SparkSession, dir: String,
       queries: DataFrame): DataFrame = {
-    val lex = TextAnalysis.impactTopDocsFor(s, dir,
-        queries.select(col("qid"), col("qtext")))
-      .select(col("qid"), col("doc_id"), col("rnk").as("lex_rnk"))
     val cents = kmeansCentroids(s, dir)
     val books = pqCodebooks(s, dir)
     val idxT = ensureIvfPqIndex(s, dir, cents, books)
-    val sem = adcServeBatchQ(s, dir,
-        graft.StagedTombstones.maskedVecs(s, dir, s.table(idxT)),
-        cents, books,
-        collectQueryVecs(queries.select(col("qid"), col("qvec"))))
-      .select(col("qid"), col("vec_id").as("doc_id"),
-        col("rnk").as("sem_rnk"))
-    rrfFuse(lex, sem)
+    adcServeBatchQ(s, dir,
+      graft.StagedTombstones.maskedVecs(s, dir, s.table(idxT)),
+      cents, books,
+      collectQueryVecs(queries.select(col("qid"), col("qvec"))))
   }
 
   /** The bounded (qid, vector) read every batched vector serve plans

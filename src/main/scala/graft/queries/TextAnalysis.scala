@@ -1267,7 +1267,7 @@ object TextAnalysis {
   /** The EXTERNAL-query PRF serve — q178 for a literal (qid BIGINT,
     * qtext STRING) relation: the [[bm25TopDocsFor]] contract for the
     * feedback-expansion read (RetrievalSpec pins it equal to q178 on
-    * the sampled documents' own texts, and to [[SqlCatalog.prfSql]]).
+    * the sampled documents' own texts; `graft_prf` serves it in SQL).
     */
   def prfTopDocsFor(s: SparkSession, dir: String,
       qtexts: DataFrame): DataFrame =
@@ -1410,7 +1410,7 @@ object TextAnalysis {
   /** The EXTERNAL-query L2 re-rank — q181 for a literal (qid BIGINT,
     * qtext STRING) relation (the [[bm25TopDocsFor]] contract for the
     * serving ladder; RetrievalSpec pins it equal to q181 on the sampled
-    * documents' own texts, and to [[SqlCatalog.rerankSql]]).
+    * documents' own texts; `graft_rerank` serves it in SQL).
     */
   def rerankTopDocsFor(s: SparkSession, dir: String,
       qtexts: DataFrame): DataFrame =
@@ -1479,6 +1479,7 @@ object TextAnalysis {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val impT = s"graft_lex_impact_$tag"
     val memoKey = (s.sparkContext.applicationId, dir)
+    graft.Bucketing.withStageLock(impT) { // double-checked (r22, §2.6)
     if (!s.catalog.tableExists(impT)) {
       val (postT, dlT, _, n, l) = ensureLexIndex(s, dir)
       stageImpactFrom(s, impT, postT, dlT, impactKFor(s, dir),
@@ -1529,6 +1530,7 @@ object TextAnalysis {
         impactCurrent.put(memoKey, java.lang.Boolean.TRUE)
       }
     }
+    } // withStageLock
     impT
   }
 
@@ -1686,8 +1688,8 @@ object TextAnalysis {
   /** The EXTERNAL-query impact-ordered serve — q182 for a literal
     * (qid BIGINT, qtext STRING) relation (the [[bm25TopDocsFor]]
     * contract for the approximate road; RetrievalSpec pins it equal to
-    * q182 on the sampled documents' own texts, and to
-    * [[SqlCatalog.impactSql]]).
+    * q182 on the sampled documents' own texts; `graft_impact` serves it
+    * in SQL).
     */
   def impactTopDocsFor(s: SparkSession, dir: String,
       qtexts: DataFrame): DataFrame =
@@ -1700,11 +1702,11 @@ object TextAnalysis {
 
   /** The EXTERNAL-query BM25 serve — the q148 ranking for a literal
     * (qid BIGINT, qtext STRING) relation (an ad-hoc query string, a
-    * query log, anything NOT sampled from the corpus): exactly
-    * [[SqlCatalog.bm25Sql]]'s contract, in the Scala API. Same staged
-    * index, same integer arithmetic, same per-query cap and cut, same
-    * takedown mask — RetrievalSpec pins it equal to q148 when fed the
-    * sampled documents' own texts, and to the catalog SQL form.
+    * query log, anything NOT sampled from the corpus), and the plan
+    * `graft_bm25('qview')` serves in SQL ([[graft.SqlCatalog]]). Same
+    * staged index, same integer arithmetic, same per-query cap and cut,
+    * same takedown mask — RetrievalSpec pins it equal to q148 when fed
+    * the sampled documents' own texts.
     */
   def bm25TopDocsFor(s: SparkSession, dir: String,
       qtexts: DataFrame): DataFrame =
@@ -1746,8 +1748,10 @@ object TextAnalysis {
   private[graft] def ensurePosIndex(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val posT = s"graft_lex_pos_$tag"
-    if (!s.catalog.tableExists(posT))
-      stagePosFrom(s, Tables.wide(s, dir, "documents"), posT)
+    graft.Bucketing.withStageLock(posT) { // double-checked (r22, §2.6)
+      if (!s.catalog.tableExists(posT))
+        stagePosFrom(s, Tables.wide(s, dir, "documents"), posT)
+    }
     posT
   }
 
@@ -2601,13 +2605,9 @@ object TextAnalysis {
         .select(col("doc_id"), col("pass"))
       val bt = nbBucketTokens(docs)
         .persist() // feeds training AND the stitch; consumer releases
-      val sc = bt.join(broadcast(nbBucketWeights(bt, lab)), "b")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("w").as("nb_score"))
-      lab.join(sc, Seq("doc_id"), "left")
+      nbScore(lab, bt, nbBucketWeights(bt, lab))
         .select(col("doc_id"), col("pass").as("gate_pass"),
-          col("n_tokens"), col("nb_score"),
-          when(col("n_tokens").isNotNull, col("nb_score") > 0).as("nb_pass"))
+          col("n_tokens"), col("nb_score"), col("nb_pass"))
     }),
 
     // PII-pattern scan: per-document counts of email / URL / IPv4-shaped
@@ -3576,6 +3576,23 @@ object TextAnalysis {
       .select(col("b"), expr(
         s"CAST(${bits("c1 + 1")} - ${bits("t1 + v")} - " +
           s"${bits("c0 + 1")} + ${bits("t0 + v")} AS BIGINT)").as("w"))
+  }
+
+  /** q168's scoring stitch, shared with the `graft_nb` table function:
+    * each `docs` row (doc_id, …) with its tokens' count `n_tokens`, the
+    * summed bucket weight `nb_score` and `nb_pass` (score > 0) appended
+    * — `bt` is the documents' [[nbBucketTokens]], `weights` a (b, w)
+    * table from [[nbBucketWeights]] (≤ NbBuckets rows, broadcast). A
+    * document with no token keeps its row with null model columns.
+    */
+  private[graft] def nbScore(docs: DataFrame, bt: DataFrame,
+      weights: DataFrame): DataFrame = {
+    val sc = bt.join(broadcast(weights), "b")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"), sum("w").as("nb_score"))
+    docs.join(sc, Seq("doc_id"), "left")
+      .withColumn("nb_pass",
+        when(col("n_tokens").isNotNull, col("nb_score") > 0))
   }
 
   private[graft] def dsirBucketTokens(docs: DataFrame): DataFrame =

@@ -106,17 +106,23 @@ class SqlCatalogSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("pure-SQL BM25 top-k over the lexical views hash-matches the Scala serve") {
-    names
-    // the same query sample q148 uses (document-modulus), as an
-    // EXTERNAL (qid, qtext) relation — the form a query log arrives in
+  /** Publishes `q_ext`: the query sample q148 uses (document-modulus),
+    * as an EXTERNAL (qid, qtext) relation — the form a query log
+    * arrives in.
+    */
+  private def qExt(): Unit = {
     val nd = Tables(spark, dir, "documents").count()
     val qmod = math.max(5L, (nd + 7) / 8)
     Tables(spark, dir, "documents")
       .filter(col("doc_id") % qmod === 0)
       .select(col("doc_id").as("qid"), col("text").as("qtext"))
       .createOrReplaceTempView("q_ext")
-    val sql = spark.sql(SqlCatalog.bm25Sql("q_ext"))
+  }
+
+  test("pure-SQL BM25 top-k over the lexical views hash-matches the Scala serve") {
+    names
+    qExt()
+    val sql = spark.sql("SELECT * FROM graft_bm25('q_ext')")
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rnk"),
         r.getAs[Long]("doc_id"), r.getAs[Long]("score_u"))).toSet
     val scala = SparkEntry.queries("q148_bm25_topk")(spark, dir)
@@ -131,14 +137,14 @@ class SqlCatalogSpec extends AnyFunSuite {
     names
     // score the corpus itself through the catalog: every doc's
     // n_tokens/nb_score/nb_pass must equal the registered operator's
-    // (the statement spells portableHash60 % NbBuckets in native SQL)
+    // (graft_nb scores against the published graft_nb_model view)
     Tables(spark, dir, "documents").select("doc_id", "text")
       .createOrReplaceTempView("d_ext")
     def key(r: org.apache.spark.sql.Row) = (r.getAs[Long]("doc_id"),
       if (r.isNullAt(1)) null else r.getAs[Long]("n_tokens"),
       if (r.isNullAt(2)) null else r.getAs[Long]("nb_score"),
       if (r.isNullAt(3)) null else r.getAs[Boolean]("nb_pass"))
-    val sql = spark.sql(SqlCatalog.nbSql("d_ext"))
+    val sql = spark.sql("SELECT * FROM graft_nb('d_ext')")
       .select("doc_id", "n_tokens", "nb_score", "nb_pass")
       .collect().map(key).toSet
     val scala = SparkEntry.queries("q168_nb_hashed")(spark, dir)
@@ -148,6 +154,57 @@ class SqlCatalogSpec extends AnyFunSuite {
     assert(sql.nonEmpty && sql == scala,
       s"sql-only ${(sql -- scala).take(3)}; scala-only ${(scala -- sql).take(3)}")
     spark.catalog.clearCache()
+  }
+
+  test("serve table functions: a self-join on qid analyzes and pairs each top hit with its page") {
+    names
+    qExt()
+    // both sides plan the same serve: the analyzer must give the spliced
+    // plans distinct expression ids, or the join condition is ambiguous
+    val page = SparkEntry.queries("q148_bm25_topk")(spark, dir).collect()
+      .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rnk"),
+        r.getAs[Long]("doc_id"))).toSeq
+    val expected = (for {
+      (q, 1L, top) <- page
+      (q2, r, d) <- page if q2 == q
+    } yield (q, top, r, d)).toSet
+    val got = spark.sql(
+      """SELECT a.qid, a.doc_id AS top, b.rnk, b.doc_id
+        |FROM graft_bm25('q_ext') a JOIN graft_bm25('q_ext') b
+        |  ON a.qid = b.qid
+        |WHERE a.rnk = 1""".stripMargin)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(got.nonEmpty && got == expected,
+      s"sql-only ${got -- expected}; expected-only ${expected -- got}")
+    spark.catalog.clearCache()
+  }
+
+  test("serve table functions: a bad call fails with a message naming the function") {
+    names
+    qExt()
+    def failure(sql: String): String =
+      intercept[Exception](spark.sql(sql).collect()).getMessage
+    val nonLiteral = failure("SELECT * FROM graft_bm25(concat('q_', 'ext'))")
+    assert(nonLiteral.contains("graft_bm25") && nonLiteral.contains("literal"),
+      nonLiteral)
+    val column = failure("SELECT * FROM graft_bm25(q_ext)")
+    assert(column.contains("graft_bm25"), column)
+    val missing = failure("SELECT * FROM graft_bm25('no_such_qview')")
+    assert(missing.contains("graft_bm25") && missing.contains("no_such_qview"),
+      missing)
+    val shortPhrase = failure("SELECT * FROM graft_phrase('q_ext', 1)")
+    assert(shortPhrase.contains("graft_phrase"), shortPhrase)
+    val snippetK = failure("SELECT * FROM graft_snippet('q_ext', 'two')")
+    assert(snippetK.contains("graft_snippet") && snippetK.contains("literal"),
+      snippetK)
+    val app = spark.sparkContext.applicationId
+    val published = SqlCatalog.current.remove(app)
+    try {
+      val early = failure("SELECT * FROM graft_bm25('q_ext')")
+      assert(early.contains("graft_bm25") &&
+        early.contains("SqlCatalog.register"), early)
+    } finally if (published != null) SqlCatalog.current.put(app, published)
   }
 
   test("cluster-labels view serves the staged q150 artifact") {

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - lexical (BM25/phrase/proximity/snippets/index card): compared
   *     BYTE-IDENTICAL against a fresh staging of a physically reduced
   *     corpus directory (the strongest form — stats included);
-  *   - catalog SQL forms: the [[graft.SqlCatalog.bm25Sql]] statement
+  *   - catalog SQL forms: the `graft_bm25` table function
   *     over the refreshed views, same reduced-corpus ground truth;
   *   - vector probes (q68 staged IVF, q91/q122 IVF-PQ): codes are pure
   *     per-row functions of (vector, FROZEN codebooks), so a
@@ -126,7 +126,7 @@ class StagedTakedownSpec extends AnyFunSuite {
     try {
       SqlCatalog.register(spark, dirA)
       StagedTombstones.deleteDocs(spark, dirA, delDocs, "reqC")
-      val masked = spark.sql(SqlCatalog.bm25Sql("takedown_q"))
+      val masked = spark.sql("SELECT * FROM graft_bm25('takedown_q')")
         .collect().map(_.toString).sorted.toSeq
       val bandDocs = spark.table("graft_band_index")
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
@@ -138,10 +138,10 @@ class StagedTakedownSpec extends AnyFunSuite {
       assert(!ivfIds.contains(2L) && !ivfIds.contains(9L),
         "takedown vec ids still present in graft_ivfpq_index")
       SqlCatalog.register(spark, dirB)
-      val restaged = spark.sql(SqlCatalog.bm25Sql("takedown_q"))
+      val restaged = spark.sql("SELECT * FROM graft_bm25('takedown_q')")
         .collect().map(_.toString).sorted.toSeq
       assert(masked == restaged,
-        "catalog bm25Sql through the mask drifted from the re-staged catalog")
+        "graft_bm25 through the mask drifted from the re-staged catalog")
     } finally StagedTombstones.reset(spark, dirA)
     spark.catalog.clearCache()
   }
@@ -743,7 +743,7 @@ class StagedTakedownSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("vqid"))
       .select("qid", "qtext", "qvec")
     hq.createOrReplaceTempView("takedown_hyb_q")
-    def served = spark.sql(SqlCatalog.hybridSql("takedown_hyb_q"))
+    def served = spark.sql("SELECT * FROM graft_hybrid('takedown_hyb_q')")
       .collect().map(_.toString).sorted.toSeq
     try {
       SqlCatalog.register(spark, dirA)
@@ -755,7 +755,7 @@ class StagedTakedownSpec extends AnyFunSuite {
       SqlCatalog.register(spark, dirB)
       StagedTombstones.deleteVecs(spark, dirB, delDocs, "hq3")
       assert(masked == served,
-        "catalog hybridSql through the masks drifted from the re-staged catalog")
+        "graft_hybrid through the masks drifted from the re-staged catalog")
     } finally {
       StagedTombstones.reset(spark, dirA)
       StagedTombstones.reset(spark, dirB)

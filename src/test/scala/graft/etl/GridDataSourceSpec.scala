@@ -2,6 +2,8 @@ package graft.etl
 
 import graft.SparkTestSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,6 +51,22 @@ class GridDataSourceSpec extends AnyFunSuite {
       Some("SHEETA"), Some("s2")).planInputPartitions()
     assert(pruned.length == 1)
     assert(pruned.head.asInstanceOf[GridPartition].sheetName == "s2")
+  }
+
+  test("fixture readers close their directory streams: 200 lists and 200 plannings leave no descriptors open") {
+    def openFds(): Int = new java.io.File("/proc/self/fd").list().length
+    val source = new LocalGridSource(dir)
+    def plan(): Array[InputPartition] = new GridTableProvider()
+      .getTable(GridTable.Schema, Array.empty, java.util.Map.of("path", dir))
+      .asInstanceOf[GridTable]
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toBatch.planInputPartitions()
+    assert(source.list("", "", 10).size == 2 && plan().length == 3)
+    val before = openFds()
+    (1 to 200).foreach { _ => source.list("", "", 10); plan() }
+    val grown = openFds() - before
+    assert(grown < 40,
+      s"$grown descriptors are still open after 200 lists and 200 plannings")
   }
 
   test("column pruning reaches the scan") {

@@ -71,4 +71,24 @@ class TableNamingSpec extends AnyFunSuite {
       EtlMain.parseArgs(Array("a", "--shcema", "x"))) // typo must not be ignored
     assert(e.getMessage.contains("Unknown flag --shcema"))
   }
+
+  test("EtlMain.parseArgs rejects flags that cannot take effect together") {
+    def refused(args: String*): String =
+      intercept[IllegalArgumentException](EtlMain.parseArgs(args.toArray))
+        .getMessage
+    assert(refused("a", "--compact-every", "2").contains("--stream"))
+    assert(refused("a", "--compact", "all", "--stream", "ck")
+      .contains("cannot be combined"))
+    assert(refused("a", "--compact", "all", "--stream", "ck",
+      "--compact-every", "2").contains("cannot be combined"))
+    assert(refused("a", "--stream", "ck", "--compact-every", "two")
+      .contains("positive integer, got two"))
+    assert(refused("a", "--stream", "ck", "--compact-every", "0")
+      .contains("positive integer, got 0"))
+    // the combinations that do take effect still parse
+    assert(EtlMain.parseArgs(Array("a", "--stream", "ck", "--compact-every", "3"))
+      ._2 == Map("stream" -> "ck", "compact-every" -> "3"))
+    assert(EtlMain.parseArgs(Array("a", "--compact", "all"))._2 ==
+      Map("compact" -> "all"))
+  }
 }

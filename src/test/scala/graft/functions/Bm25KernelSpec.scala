@@ -1,15 +1,14 @@
 package graft.functions
 
-import graft.{SparkTestSession, SqlCatalog}
+import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The lexical BM25 kernel, pinned once for every road: the Column
-  * functions ([[TextFunctions.idfM]], [[TextFunctions.termScore]]) and
-  * the catalog SQL fragments ([[SqlCatalog.idfMSql]],
-  * [[SqlCatalog.termScoreSql]]) evaluate the same literal rows to the
-  * same hand-computed integers, and Spark's truncating `div` equals the
-  * DuckDB oracle's flooring `//` (`Math.floorDiv`) on them.
+  * functions ([[TextFunctions.idfM]], [[TextFunctions.termScore]])
+  * evaluate literal rows to hand-computed integers, and Spark's
+  * truncating `div` equals the DuckDB oracle's flooring `//`
+  * (`Math.floorDiv`) on them.
   */
 class Bm25KernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -41,15 +40,6 @@ class Bm25KernelSpec extends AnyFunSuite {
     val got = byCase(input.select(col("c"),
       TextFunctions.idfM(col("df"), col("n")),
       TextFunctions.termScore(col("tf"), col("dl"), col("a"))))
-    assert(got == expected)
-  }
-
-  test("SqlCatalog fragments give the same integers as the Column kernel") {
-    input.createOrReplaceTempView("bm25_kernel_rows")
-    val got = byCase(spark.sql(
-      s"""SELECT c, ${SqlCatalog.idfMSql("df", "n")},
-         |  ${SqlCatalog.termScoreSql("tf", "dl", "a")}
-         |FROM bm25_kernel_rows""".stripMargin))
     assert(got == expected)
   }
 

@@ -472,30 +472,30 @@ class RetrievalSpec extends AnyFunSuite {
     // catalog SQL road: the published statements over the same queries
     graft.SqlCatalog.register(spark, dir)
     qtexts.createOrReplaceTempView("retrieval_ext_q")
-    assert(rows(spark.sql(graft.SqlCatalog.bm25Sql("retrieval_ext_q"))) ==
-      rows(entry("q148_bm25_topk")), "catalog bm25Sql drifted from q148")
-    assert(rows(spark.sql(graft.SqlCatalog.phraseSql("retrieval_ext_q"))) ==
-      rows(entry("q154_phrase_topk")), "catalog phraseSql drifted from q154")
-    assert(rows(spark.sql(graft.SqlCatalog.phraseSql("retrieval_ext_q", 3))) ==
-      rows(entry("q158_phrase3_topk")), "catalog phraseSql(3) drifted from q158")
-    assert(rows(spark.sql(graft.SqlCatalog.proximitySql("retrieval_ext_q"))) ==
-      rows(entry("q159_proximity_topk")), "catalog proximitySql drifted from q159")
-    assert(rows(spark.sql(graft.SqlCatalog.snippetSql("retrieval_ext_q"))) ==
-      rows(entry("q161_phrase_snippets")), "catalog snippetSql drifted from q161")
-    assert(rows(spark.sql(graft.SqlCatalog.diverseSql("retrieval_ext_q"))) ==
-      rows(entry("q164_diverse_topk")), "catalog diverseSql drifted from q164")
+    assert(rows(spark.sql("SELECT * FROM graft_bm25('retrieval_ext_q')")) ==
+      rows(entry("q148_bm25_topk")), "graft_bm25 drifted from q148")
+    assert(rows(spark.sql("SELECT * FROM graft_phrase('retrieval_ext_q')")) ==
+      rows(entry("q154_phrase_topk")), "graft_phrase drifted from q154")
+    assert(rows(spark.sql("SELECT * FROM graft_phrase('retrieval_ext_q', 3)")) ==
+      rows(entry("q158_phrase3_topk")), "graft_phrase(3) drifted from q158")
+    assert(rows(spark.sql("SELECT * FROM graft_proximity('retrieval_ext_q')")) ==
+      rows(entry("q159_proximity_topk")), "graft_proximity drifted from q159")
+    assert(rows(spark.sql("SELECT * FROM graft_snippet('retrieval_ext_q')")) ==
+      rows(entry("q161_phrase_snippets")), "graft_snippet drifted from q161")
+    assert(rows(spark.sql("SELECT * FROM graft_diverse('retrieval_ext_q')")) ==
+      rows(entry("q164_diverse_topk")), "graft_diverse drifted from q164")
     assert(rows(TextAnalysis.prfTopDocsFor(spark, dir, qtexts)) ==
       rows(entry("q178_prf_topk")), "prfTopDocsFor drifted from q178")
-    assert(rows(spark.sql(graft.SqlCatalog.prfSql("retrieval_ext_q"))) ==
-      rows(entry("q178_prf_topk")), "catalog prfSql drifted from q178")
+    assert(rows(spark.sql("SELECT * FROM graft_prf('retrieval_ext_q')")) ==
+      rows(entry("q178_prf_topk")), "graft_prf drifted from q178")
     assert(rows(TextAnalysis.rerankTopDocsFor(spark, dir, qtexts)) ==
       rows(entry("q181_feature_rerank")), "rerankTopDocsFor drifted from q181")
-    assert(rows(spark.sql(graft.SqlCatalog.rerankSql("retrieval_ext_q"))) ==
-      rows(entry("q181_feature_rerank")), "catalog rerankSql drifted from q181")
+    assert(rows(spark.sql("SELECT * FROM graft_rerank('retrieval_ext_q')")) ==
+      rows(entry("q181_feature_rerank")), "graft_rerank drifted from q181")
     assert(rows(TextAnalysis.impactTopDocsFor(spark, dir, qtexts)) ==
       rows(entry("q182_impact_bm25_topk")), "impactTopDocsFor drifted from q182")
-    assert(rows(spark.sql(graft.SqlCatalog.impactSql("retrieval_ext_q"))) ==
-      rows(entry("q182_impact_bm25_topk")), "catalog impactSql drifted from q182")
+    assert(rows(spark.sql("SELECT * FROM graft_impact('retrieval_ext_q')")) ==
+      rows(entry("q182_impact_bm25_topk")), "graft_impact drifted from q182")
     spark.catalog.clearCache()
   }
 
@@ -790,9 +790,9 @@ class RetrievalSpec extends AnyFunSuite {
       .createOrReplaceTempView("retrieval_adc_q")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(spark.sql(graft.SqlCatalog.adcSql("retrieval_adc_q"))) ==
+    assert(rows(spark.sql("SELECT * FROM graft_adc('retrieval_adc_q')")) ==
       rows(graft.SparkEntry.queries("q122_ann_serve_batch")(spark, dir)),
-      "catalog adcSql drifted from the q122 serve")
+      "graft_adc drifted from the q122 serve")
     spark.catalog.clearCache()
   }
 
@@ -814,7 +814,7 @@ class RetrievalSpec extends AnyFunSuite {
       transform(col("qvec"),
         (x, i) => when(i === 0, lit(Double.NaN)).otherwise(x)).as("qvec"))
     valid.unionByName(poisoned).createOrReplaceTempView("retrieval_nan_q")
-    val served = spark.sql(graft.SqlCatalog.adcSql("retrieval_nan_q"))
+    val served = spark.sql("SELECT * FROM graft_adc('retrieval_nan_q')")
       .select("qid").collect().map(_.getLong(0)).toSet
     assert(served == Set(7000L),
       s"the NaN query must serve nothing, the valid one must serve: $served")
@@ -849,8 +849,8 @@ class RetrievalSpec extends AnyFunSuite {
     // the third road: the whole fused serve as ONE catalog SQL text
     graft.SqlCatalog.register(spark, dir)
     queries.createOrReplaceTempView("retrieval_hybrid_q")
-    assert(rows(spark.sql(graft.SqlCatalog.hybridSql("retrieval_hybrid_q")))
-      == truth, "catalog hybridSql drifted from q149")
+    assert(rows(spark.sql("SELECT * FROM graft_hybrid('retrieval_hybrid_q')"))
+      == truth, "graft_hybrid drifted from q149")
     spark.catalog.clearCache()
   }
 
@@ -975,8 +975,8 @@ class RetrievalSpec extends AnyFunSuite {
     graft.SqlCatalog.register(spark, dir)
     queries.createOrReplaceTempView("retrieval_bhybrid_q")
     assert(rows(spark.sql(
-        graft.SqlCatalog.boundedHybridSql("retrieval_bhybrid_q")))
-      == truth, "catalog boundedHybridSql drifted from q185")
+        "SELECT * FROM graft_bounded_hybrid('retrieval_bhybrid_q')"))
+      == truth, "graft_bounded_hybrid drifted from q185")
     spark.catalog.clearCache()
   }
 
