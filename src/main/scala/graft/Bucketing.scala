@@ -57,17 +57,6 @@ object Bucketing {
     b
   }
 
-  /** Stage `df` as managed table `name`, hash-bucketed AND per-bucket
-    * sorted by `key` — exactly ONE file per bucket. Without the
-    * key-repartition first, EVERY write task emits a file for every
-    * bucket it holds rows for (tasks × buckets files): a 10k-task fact
-    * scan at 1024 buckets would fragment into millions of small files,
-    * recreating at write time the problem [[Compaction]] exists to fix —
-    * and a bucketed table cannot be compacted by a plain rewrite without
-    * destroying its catalog bucket spec. `repartition(buckets, key)`
-    * uses the same murmur3-pmod placement as the bucket spec, so each
-    * task holds exactly one bucket's rows.
-    */
   /** Rewrite staged table `name` in place as `transform(current rows)`,
     * preserving its catalog bucket spec (count, key, sort) — the
     * physical-purge primitive: a takedown's masked rows leave the files,
@@ -82,7 +71,8 @@ object Bucketing {
     * crash between them leaves `name` missing with the completed rewrite
     * parked under the scratch name. Re-running recovers: the scratch
     * table (a full transformed copy by construction — it is only ever
-    * staged COMPLETE before the drop) is renamed back in, then the
+    * staged COMPLETE before the drop) is renamed back in
+    * ([[Staged.restored]], which every ensure runs too), then the
     * rewrite re-runs over it. That re-run applies `transform` to
     * already-transformed rows, so every transform passed here must be
     * IDEMPOTENT (the purge family's are: anti-join masks drop
@@ -93,15 +83,10 @@ object Bucketing {
     */
   def rewriteInPlace(spark: org.apache.spark.sql.SparkSession, name: String,
       transform: DataFrame => DataFrame): Unit = {
-    val tmp = s"${name}__rewrite"
-    if (!spark.catalog.tableExists(name)) {
-      // recover a crashed swap: the scratch is the complete rewrite
-      // output — restore it under the serve name and fall through to
-      // re-run (idempotent-transform contract above)
-      if (spark.catalog.tableExists(tmp))
-        spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$name`")
-      else return
-    }
+    val tmp = Staged.scratch(name)
+    // a crashed swap's scratch is restored under the serve name and the
+    // rewrite re-runs over it (idempotent-transform contract above)
+    if (!Staged.restored(spark, name)) return
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(name))
     val spec = meta.bucketSpec.getOrElse(sys.error(
@@ -112,39 +97,19 @@ object Bucketing {
     spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$name`")
   }
 
-  /** Per-table-name staging locks. An `ensure*` staging function is
-    * check-then-create (`if (!tableExists(t)) stage`), which is racy
-    * the moment two callers build on separate driver threads (parallel
-    * card-member construction, or concurrent `spark.sql` statements
-    * naming the `graft_*` serve table functions) — both could see
-    * !exists and CTAS the same name. The locked ensures —
-    * `TextAnalysis.ensureQuerySample`, `ensureLexIndex`,
-    * `ensureImpactIndex`, `ensurePosIndex` and
-    * `Similarity.ensureIvfPqIndex` — wrap their body in
-    * `withStageLock(name)` with the existence check INSIDE
-    * (double-checked): creation runs exactly once per name, the
-    * post-staging steady state pays one uncontended lock + catalog
-    * lookup. Locks are per-name, so independent stagings still overlap.
-    * The other ensures still check and create without a lock.
+  /** Stage `df` as managed table `name`, hash-bucketed AND per-bucket
+    * sorted by `key` — exactly ONE file per bucket. Without the
+    * key-repartition first, EVERY write task emits a file for every
+    * bucket it holds rows for (tasks × buckets files): a 10k-task fact
+    * scan at 1024 buckets would fragment into millions of small files,
+    * recreating at write time the problem [[Compaction]] exists to fix —
+    * and a bucketed table cannot be compacted by a plain rewrite without
+    * destroying its catalog bucket spec. `repartition(buckets, key)`
+    * uses the same murmur3-pmod placement as the bucket spec, so each
+    * task holds exactly one bucket's rows.
     */
-  private val stageLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  def withStageLock[A](name: String)(body: => A): A =
-    stageLocks.computeIfAbsent(name, _ => new Object).synchronized(body)
-
   def stage(df: DataFrame, name: String, key: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // staging OWNS the name: drop a previous registration, and clear an
-    // ORPHANED default-warehouse location — files left by an earlier JVM
-    // are invisible to this one's in-memory catalog, and CTAS refuses to
-    // create a managed table over a non-empty location
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Staged.clear(df.sparkSession, name) // staging OWNS the name
     df.repartition(buckets, df(key))
       .write
       .bucketBy(buckets, key)

@@ -2,6 +2,38 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 
+/** Streaming aftercare cadence (`--stream` + `--compact-every N`): a
+  * long-lived discovery stream fragments its target tables through
+  * chunked per-job partition overwrites; this counter compacts each
+  * TOUCHED table after every N loaded micro-batches, so the file count
+  * of a target is bounded by the cadence, not by stream age — the same
+  * contract the streaming index keeps via `BatchProtocol.compactIndex`.
+  * Idle batches (nothing loaded) don't advance the counter: an
+  * all-quiet night never triggers a pointless full-table rewrite.
+  */
+private[etl] final class CompactCadence(targets: TargetStore, every: Int) {
+  require(every > 0, s"compact-every must be positive, got $every")
+  private var loadedBatches = 0
+  private val touched = scala.collection.mutable.Set.empty[String]
+
+  /** Observe one micro-batch's loads; returns compaction report lines
+    * (empty when the cadence doesn't fire). */
+  def onBatch(loaded: Seq[EtlConfig]): Seq[String] = {
+    if (loaded.nonEmpty) {
+      loadedBatches += 1
+      touched ++= loaded.map(_.targetTable)
+    }
+    if (loaded.nonEmpty && loadedBatches % every == 0 && touched.nonEmpty) {
+      val report = touched.toSeq.sorted.map { t =>
+        val (before, after) = targets.compact(t)
+        s"[graft-etl] compacted $t: $before -> $after file(s)"
+      }
+      touched.clear()
+      report
+    } else Nil
+  }
+}
+
 /** CLI entry point — the reference's `bin/google-sheets-etl` role, wired to
   * the REAL sequence the stale reference CLI intended (SURVEY.md §0.1):
   * loadConfiguration → setUpAccounting → findSomeUpdatedSpreadsheets →
@@ -46,38 +78,6 @@ import org.apache.spark.sql.SparkSession
   * long-lived discovery stream's target file counts stay bounded by the
   * cadence instead of growing with stream age.
   */
-/** Streaming aftercare cadence (`--stream` + `--compact-every N`): a
-  * long-lived discovery stream fragments its target tables through
-  * chunked per-job partition overwrites; this counter compacts each
-  * TOUCHED table after every N loaded micro-batches, so the file count
-  * of a target is bounded by the cadence, not by stream age — the same
-  * contract the streaming index keeps via `BatchProtocol.compactIndex`.
-  * Idle batches (nothing loaded) don't advance the counter: an
-  * all-quiet night never triggers a pointless full-table rewrite.
-  */
-private[etl] final class CompactCadence(targets: TargetStore, every: Int) {
-  require(every > 0, s"compact-every must be positive, got $every")
-  private var loadedBatches = 0
-  private val touched = scala.collection.mutable.Set.empty[String]
-
-  /** Observe one micro-batch's loads; returns compaction report lines
-    * (empty when the cadence doesn't fire). */
-  def onBatch(loaded: Seq[EtlConfig]): Seq[String] = {
-    if (loaded.nonEmpty) {
-      loadedBatches += 1
-      touched ++= loaded.map(_.targetTable)
-    }
-    if (loaded.nonEmpty && loadedBatches % every == 0 && touched.nonEmpty) {
-      val report = touched.toSeq.sorted.map { t =>
-        val (before, after) = targets.compact(t)
-        s"[graft-etl] compacted $t: $before -> $after file(s)"
-      }
-      touched.clear()
-      report
-    } else Nil
-  }
-}
-
 object EtlMain {
   def main(args: Array[String]): Unit = {
     val (positional, flags) = parseArgs(args)

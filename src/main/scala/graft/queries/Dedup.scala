@@ -82,39 +82,43 @@ object Dedup {
     * checkpoint/persist scaffolding is freed once the table is written.
     */
   private def ensureLabels(s: SparkSession, dir: String, family: String,
-      pairsOf: (DataFrame, Long) => DataFrame,
-      extraMask: Seq[Long] = Nil): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val lblT = s"graft_${family}_labels_$tag"
-    if (!s.catalog.tableExists(lblT)) {
-      // the clustering universe is the corpus MINUS every id a purge has
-      // already physically erased (plus the in-flight purge's ids, passed
-      // by rebuildLabelsAfterPurge before its requests retire): the
-      // closure over the reduced relation IS a re-clustering of a corpus
-      // that never held them — min-ids, sizes, and even the band width
-      // re-derive. With no purged ids the mask folds away and the build
-      // is byte-identical to the historical full-corpus staging.
-      val maskIds = (extraMask ++
-        graft.StagedTombstones.purgedDocIds(s, dir)).distinct
-      val mask = if (maskIds.isEmpty) None else Some(maskIds)
-      def maskDocs(rel: DataFrame): DataFrame =
-        graft.StagedTombstones.masked(s, rel, mask, "doc_id")
-      val docs = maskDocs(Tables(s, dir, "documents").select(col("doc_id")))
-      val n =
-        if (maskIds.isEmpty) Tables.rowCount(s, dir, "documents")
-        else docs.count()
-      val before = s.sparkContext.getPersistentRDDs.keySet.toSet
-      val (labels, _) = propagateMin(s,
-        pairsOf(maskDocs(Tables.wide(s, dir, "documents")), n), docs)
-      graft.Bucketing.stage(labels, lblT, "doc_id",
-        graft.Bucketing.bucketCountFor(n))
-      // the loop's persisted blocks (pair-query persists, the final
-      // round's checkpoint) are build scaffolding once the table exists
-      (s.sparkContext.getPersistentRDDs.keySet.toSet -- before).foreach(
-        id => s.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(false)))
-    }
+      pairsOf: (DataFrame, Long) => DataFrame): DataFrame = {
+    val lblT = graft.Staged.name(s"${family}_labels", dir)
+    graft.Staged.ensure(s, lblT)(stageLabels(s, dir, lblT, pairsOf, Nil))
     s.table(lblT)
+  }
+
+  /** [[ensureLabels]]' build: the closure over the corpus minus `extraMask`
+    * and the purged ledger, staged as `lblT`.
+    */
+  private def stageLabels(s: SparkSession, dir: String, lblT: String,
+      pairsOf: (DataFrame, Long) => DataFrame, extraMask: Seq[Long]): Unit = {
+    // the clustering universe is the corpus MINUS every id a purge has
+    // already physically erased (plus the in-flight purge's ids, passed
+    // by rebuildLabelsAfterPurge before its requests retire): the
+    // closure over the reduced relation IS a re-clustering of a corpus
+    // that never held them — min-ids, sizes, and even the band width
+    // re-derive. With no purged ids the mask folds away and the build
+    // is byte-identical to the historical full-corpus staging.
+    val maskIds = (extraMask ++
+      graft.StagedTombstones.purgedDocIds(s, dir)).distinct
+    val mask = if (maskIds.isEmpty) None else Some(maskIds)
+    def maskDocs(rel: DataFrame): DataFrame =
+      graft.StagedTombstones.masked(s, rel, mask, "doc_id")
+    val docs = maskDocs(Tables(s, dir, "documents").select(col("doc_id")))
+    val n =
+      if (maskIds.isEmpty) Tables.rowCount(s, dir, "documents")
+      else docs.count()
+    val before = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val (labels, _) = propagateMin(s,
+      pairsOf(maskDocs(Tables.wide(s, dir, "documents")), n), docs)
+    graft.Bucketing.stage(labels, lblT, "doc_id",
+      graft.Bucketing.bucketCountFor(n))
+    // the loop's persisted blocks (pair-query persists, the final
+    // round's checkpoint) are build scaffolding once the table exists
+    (s.sparkContext.getPersistentRDDs.keySet.toSet -- before).foreach(
+      id => s.sparkContext.getPersistentRDDs.get(id)
+        .foreach(_.unpersist(false)))
   }
 
   private def pairs32(docs: DataFrame, n: Long): DataFrame =
@@ -142,9 +146,7 @@ object Dedup {
     * purged ledger (their builds mask it). Idempotent.
     */
   private[graft] def dropAppendedDemos(s: SparkSession, dir: String): Unit = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val lblT = s"graft_q184_labels_$tag"
-    if (s.catalog.tableExists(lblT)) s.sql(s"DROP TABLE `$lblT`")
+    graft.Staged.drop(s, graft.Staged.name("q184_labels", dir))
     Seq(labelRoots, q184BandRoots).foreach(m =>
       Option(m.remove((s.sparkContext.applicationId, dir)))
         .foreach { r =>
@@ -175,16 +177,15 @@ object Dedup {
     */
   private[graft] def rebuildLabelsAfterPurge(s: SparkSession, dir: String,
       maskIds: Seq[Long]): Seq[String] = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     Seq(("q43", pairs32 _), ("q150", pairs64 _)).flatMap {
       case (family, pf) =>
-        val lblT = s"graft_${family}_labels_$tag"
-        if (!s.catalog.tableExists(lblT)) None
-        else {
-          s.sql(s"DROP TABLE `$lblT`")
-          ensureLabels(s, dir, family, pf, maskIds)
-          Some(lblT)
-        }
+        // drop and rebuild under the label table's lock: an ensure on
+        // another thread (graft_diverse reaches the q150 labels) waits
+        // for the masked rebuild instead of staging unmasked labels
+        val lblT = graft.Staged.name(s"${family}_labels", dir)
+        if (graft.Staged.restage(s, lblT)(true)(
+            stageLabels(s, dir, lblT, pf, maskIds))) Some(lblT)
+        else None
     }
   }
 
@@ -428,9 +429,8 @@ object Dedup {
     * cap-crossing growth where append and fresh genuinely diverge).
     */
   private def ensureAppendedLabels(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val lblT = s"graft_q184_labels_$tag"
-    if (!s.catalog.tableExists(lblT)) {
+    val lblT = graft.Staged.name("q184_labels", dir)
+    graft.Staged.ensure(s, lblT) {
       // build universe = corpus minus the purged ledger (the
       // ensureLabels posture): a purge DROPS this demo artifact
       // ([[dropAppendedDemos]]) and the rebuild must not resurrect
@@ -459,7 +459,7 @@ object Dedup {
         // long-lived deployment freezes it instead (the LabelStream
         // stance) and acts on q191 exactly as this ensure does below.
         val wU = Similarity.bandWidth64For(nUnion)
-        val bandDir = warehouseDir(s, s"graft_q184_bands_$tag")
+        val bandDir = warehouseDir(s, graft.Staged.name("q184_bands", dir))
         q184BandRoots.put((s.sparkContext.applicationId, dir), bandDir)
         graft.streaming.LabelBandIndex.write(s, bandDir,
           Similarity.sketch64(oldDocs), wU)
@@ -707,9 +707,8 @@ object Dedup {
     * band index, the q192 stream root): on a real cluster the session
     * warehouse is shared storage every executor can read, where a
     * driver-local temp dir is not — so the demo paths exercise the
-    * production layout. Clears an orphan left by an earlier JVM (the
-    * Bucketing.stage discipline: stale files under the default
-    * warehouse are invisible to this session's in-memory catalog).
+    * production layout. Clears an orphan left by an earlier JVM
+    * ([[graft.Staged.clear]]).
     */
   private[queries] def warehouseDir(s: SparkSession, name: String): String = {
     // scoped by applicationId (r21, the advisor's concurrency fix): the
@@ -720,13 +719,8 @@ object Dedup {
     // re-created session id re-uses its path; distinct sessions never
     // collide). Dead sessions may leave orphans, which is the ordinary
     // temp-artifact trade and strictly safer than cross-session deletes.
-    val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val p = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_$app")))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    p.toString
+    graft.Staged.clear(s,
+      s"${name}_${graft.Staged.tag(s.sparkContext.applicationId)}")
   }
 
   /** The near-dup-diversified cut (q164's defining half): suppress each
@@ -805,8 +799,7 @@ object Dedup {
     "q192_label_stream" -> ((s, dir) => {
       val root = labelRoots.computeIfAbsent(
         (s.sparkContext.applicationId, dir), _ => {
-          val r = warehouseDir(s,
-            s"graft_q192_root_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+          val r = warehouseDir(s, graft.Staged.name("q192_root", dir))
           // the root's universe excludes the purged ledger (a purge
           // deletes the root — [[dropAppendedDemos]] — and the rebuild
           // must not re-adopt erased documents)

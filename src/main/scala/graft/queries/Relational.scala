@@ -252,17 +252,16 @@ object Relational {
     // clustering too) plans with ZERO Exchange operators. At 100 TB this
     // is the pay-the-shuffle-once posture: the fact table re-shuffles on
     // NO subsequent query against any co-staged relation. Staging runs
-    // once per (session, sf dir) — the catalog check mirrors how a
+    // once per (session, sf dir) — the graft.Staged check mirrors how a
     // warehouse amortizes the staging write across every later join —
     // and the merge hint keeps the plan the sort-merge shape a big×big
     // join takes (a broadcast at toy scale would hide the property the
     // staging buys). Semantics are the plain join+agg the oracle runs;
     // the staging is an implementation detail of the Spark plan.
     "q64_bucketed_join" -> ((s, dir) => {
-      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val ordersT = s"graft_q64_orders_$tag"
-      val itemsT = s"graft_q64_items_$tag"
-      if (!s.catalog.tableExists(ordersT)) {
+      val ordersT = graft.Staged.name("q64_orders", dir)
+      val itemsT = graft.Staged.name("q64_items", dir)
+      graft.Staged.ensure(s, ordersT, itemsT) {
         // the in-memory catalog starts empty per JVM, so a fresh session
         // always re-stages (overwrite) — stale files from an older run
         // can never serve a query

@@ -262,16 +262,18 @@ object Similarity {
           t
         }))
 
-  private val centsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Array[(Int, Seq[Double], Double)]]
-  private val booksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Array[Array[Array[Double]]]]
+  /** Per-(session, dir) trained quantizers, each with the embeddings'
+    * mtime it was trained at ([[Tables.atMtime]]).
+    */
+  private[graft] val centsMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, Array[(Int, Seq[Double], Double)])]
+  private[graft] val booksMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, Array[Array[Array[Double]]])]
 
   private[graft] def kmeansCentroids(s: SparkSession,
       dir: String): Array[(Int, Seq[Double], Double)] =
-    centsMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, Tables.mtimeOf(s, dir, "embeddings")),
-      _ => trainKmeansCentroids(s, dir))
+    Tables.atMtime(centsMemo, (s.sparkContext.applicationId, dir),
+      Tables.mtimeOf(s, dir, "embeddings"))(trainKmeansCentroids(s, dir))
 
   private def trainKmeansCentroids(s: SparkSession, dir: String): Array[(Int, Seq[Double], Double)] = {
     def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -363,9 +365,8 @@ object Similarity {
     */
   private[graft] def pqCodebooks(s: SparkSession,
       dir: String): Array[Array[Array[Double]]] =
-    booksMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, Tables.mtimeOf(s, dir, "embeddings")),
-      _ => trainPqCodebooks(s, dir)) // the centsMemo stance, PQ side
+    Tables.atMtime(booksMemo, (s.sparkContext.applicationId, dir),
+      Tables.mtimeOf(s, dir, "embeddings"))(trainPqCodebooks(s, dir))
 
   private def trainPqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
     val n = Tables.rowCount(s, dir, "embeddings")
@@ -1033,9 +1034,8 @@ object Similarity {
     */
   private[graft] def ensureIvfCellTable(s: SparkSession,
       dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val idxT = s"graft_q68_ivf_$tag"
-    if (!s.catalog.tableExists(idxT)) {
+    val idxT = graft.Staged.name("q68_ivf", dir)
+    graft.Staged.ensure(s, idxT) {
       val cents: Array[(Int, Seq[Double], Double)] = kmeansCentroids(s, dir)
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
@@ -1077,11 +1077,8 @@ object Similarity {
   private def ensureAppendedIvf(s: SparkSession, dir: String,
       cents: Array[(Int, Seq[Double], Double)],
       books: Array[Array[Array[Double]]]): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val idxT = s"graft_ivfapp_$tag"
-    val doneT = s"graft_ivfapp_done_$tag"
-    if (!s.catalog.tableExists(doneT)) {
-      if (s.catalog.tableExists(idxT)) s.sql(s"DROP TABLE `$idxT`")
+    val Seq(idxT, doneT) = appendedIvfFamily(dir)
+    graft.Staged.ensure(s, idxT, doneT) {
       // the family builds over the embeddings MINUS the purged ledger
       // (the dropAppendedLex posture, vector side): a purge DROPS this
       // demo family and the rebuild must not resurrect erased vectors
@@ -1100,15 +1097,8 @@ object Similarity {
         .repartition(nb, col("cell"))
         .select(s.table(idxT).columns.map(col): _*)
         .write.insertInto(idxT)
-      // the Bucketing.stage orphan discipline for the marker (files
-      // left by an earlier JVM are invisible to this catalog)
       val ss = s
       import ss.implicits._
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(doneT)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       Seq(1L).toDF("done").write.saveAsTable(doneT)
     }
     idxT
@@ -1119,11 +1109,12 @@ object Similarity {
     * the session-derived tables; the next ensure rebuilds them over
     * the embeddings minus the purged ledger.
     */
-  private[graft] def dropAppendedIvf(s: SparkSession, dir: String): Unit = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    Seq(s"graft_ivfapp_$tag", s"graft_ivfapp_done_$tag").foreach(t =>
-      if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`"))
-  }
+  private[graft] def dropAppendedIvf(s: SparkSession, dir: String): Unit =
+    graft.Staged.drop(s, appendedIvfFamily(dir): _*)
+
+  /** The appended vector demo's code table and its `done` marker. */
+  private def appendedIvfFamily(dir: String): Seq[String] =
+    Seq("ivfapp", "ivfapp_done").map(graft.Staged.name(_, dir))
 
   /** The vector half of [[graft.StagedTombstones.purge]]: physically
     * rewrite BOTH staged vector-serve tables of (session, dir) — the
@@ -1152,17 +1143,14 @@ object Similarity {
   private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String,
       cents: Array[(Int, Seq[Double], Double)],
       books: Array[Array[Array[Double]]]): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val idxT = s"graft_q91_ivfpq_$tag"
-    graft.Bucketing.withStageLock(idxT) { // double-checked (r22, §2.6)
-      if (!s.catalog.tableExists(idxT)) {
-        val coded = pqCodes(Tables(s, dir, "embeddings"), cents, books)
-        // corpus-adaptive layout (the ensureLexIndex discipline), derived
-        // from the embeddings row count — a metadata-only parquet count
-        // that upper-bounds the coded rows without recomputing the codes
-        graft.Bucketing.stage(coded, idxT, "cell", graft.Bucketing
-          .bucketCountFor(Tables.rowCount(s, dir, "embeddings")))
-      }
+    val idxT = graft.Staged.name("q91_ivfpq", dir)
+    graft.Staged.ensure(s, idxT) {
+      val coded = pqCodes(Tables(s, dir, "embeddings"), cents, books)
+      // corpus-adaptive layout (the ensureLexIndex discipline), derived
+      // from the embeddings row count — a metadata-only parquet count
+      // that upper-bounds the coded rows without recomputing the codes
+      graft.Bucketing.stage(coded, idxT, "cell", graft.Bucketing
+        .bucketCountFor(Tables.rowCount(s, dir, "embeddings")))
     }
     idxT
   }
@@ -1576,20 +1564,19 @@ object Similarity {
     "q173_adc_union_serve" -> ((s, dir) => {
       val cents: Array[(Int, Seq[Double], Double)] = kmeansCentroids(s, dir)
       val books = pqCodebooks(s, dir)
-      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val stagedT = s"graft_q173_staged_$tag"
-      if (!s.catalog.tableExists(stagedT))
+      val stagedT = graft.Staged.name("q173_staged", dir)
+      graft.Staged.ensure(s, stagedT)(
         graft.Bucketing.stage(
           pqCodes(Tables(s, dir, "embeddings")
             .filter(col("vec_id") % 2 === 0), cents, books),
           stagedT, "cell", graft.Bucketing
-            .bucketCountFor(Tables.rowCount(s, dir, "embeddings")))
+            .bucketCountFor(Tables.rowCount(s, dir, "embeddings"))))
       val root = adcRoots.computeIfAbsent(
         (s.sparkContext.applicationId, dir), _ => {
           // warehouse-rooted, not driver-local: executors on a real
           // cluster must read the accumulated epochs (the q192/q194
           // demo-root discipline)
-          val r = Dedup.warehouseDir(s, s"graft_q173_root_$tag")
+          val r = Dedup.warehouseDir(s, graft.Staged.name("q173_root", dir))
           val odd = Tables(s, dir, "embeddings")
             .filter(col("vec_id") % 2 === 1)
           graft.streaming.EmbedStream.processAdcBatch(s,
@@ -1900,8 +1887,8 @@ object Similarity {
       // bm25AndPrfPages runs its own bounded collects (r22, guide §2.6
       // — one member's driver actions back-fill the other's stage
       // tails). Its stagings (the IVF-PQ index, and the query sample
-      // the bm25 member also stages) are per-name locked
-      // (Bucketing.withStageLock), and the quantizer and sample memos it
+      // the bm25 member also stages) go through graft.Staged.ensure,
+      // locked per name, and the quantizer and sample memos it
       // fills are computeIfAbsent maps. The member is awaited in a
       // `finally`, so no job of it runs after this entry returns or
       // throws (a bm25 failure propagates once the member has finished).

@@ -177,10 +177,8 @@ object TextAnalysis {
     */
   private[queries] def ensureQuerySample(s: SparkSession,
       dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val t = s"graft_qsample_$tag"
-    graft.Bucketing.withStageLock(t) { // double-checked (r22, §2.6)
-    if (!s.catalog.tableExists(t)) {
+    val t = graft.Staged.name("qsample", dir)
+    graft.Staged.ensure(s, t) {
       // a side whose table the corpus dir does not carry (a
       // documents-only or embeddings-only fixture) is the defined
       // empty sample, not a read error
@@ -219,17 +217,8 @@ object TextAnalysis {
               if e.getCondition == "PATH_NOT_FOUND" ||
                 e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
         }
-      // the Bucketing.stage orphan discipline: files left under the
-      // default warehouse by an earlier JVM are invisible to this one's
-      // in-memory catalog, and CTAS refuses a non-empty location
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       doc.unionByName(vec).coalesce(1).write.saveAsTable(t)
     }
-    } // withStageLock
     t
   }
 
@@ -706,14 +695,10 @@ object TextAnalysis {
     */
   private[graft] def ensureLexIndex(s: SparkSession, dir: String)
       : (String, String, String, Long, Long) = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val postT = s"graft_lex_postings_$tag"
-    val dlT = s"graft_lex_doclen_$tag"
-    val dfT = s"graft_lex_df_$tag"
-    graft.Bucketing.withStageLock(postT) { // double-checked (r22, §2.6)
-      if (!s.catalog.tableExists(postT))
-        stageLexFrom(s, Tables.wide(s, dir, "documents"), postT, dlT, dfT)
-    }
+    val Seq(postT, dlT, dfT) =
+      Seq("lex_postings", "lex_doclen", "lex_df").map(graft.Staged.name(_, dir))
+    graft.Staged.ensure(s, postT, dlT, dfT)(
+      stageLexFrom(s, Tables.wide(s, dir, "documents"), postT, dlT, dfT))
     val (n, l) = lexStats.computeIfAbsent(
       (s.sparkContext.applicationId, dir), _ => {
         // N counts ALL documents (null text included — they shape idf);
@@ -805,6 +790,11 @@ object TextAnalysis {
   private val q194Roots = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (String, String)]
 
+  /** The appended demo family's tables, its `done` marker last. */
+  private def appendedLexFamily(dir: String): Seq[String] =
+    Seq("postings", "doclen", "df", "pos", "impact", "done")
+      .map(t => graft.Staged.name(s"lexapp_$t", dir))
+
   /** Builds (once per session+dir) the APPENDED demo index family:
     * the seven-eighths shard stages through [[stageLexFrom]], then the
     * residue-3 delta shard (q184's corpus-growth split) APPENDS through
@@ -817,17 +807,9 @@ object TextAnalysis {
     */
   private def ensureAppendedLex(s: SparkSession, dir: String)
       : (String, String, String, String, String, Long, Long) = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val postT = s"graft_lexapp_postings_$tag"
-    val dlT = s"graft_lexapp_doclen_$tag"
-    val dfT = s"graft_lexapp_df_$tag"
-    val posT = s"graft_lexapp_pos_$tag"
-    val impT = s"graft_lexapp_impact_$tag"
-    val doneT = s"graft_lexapp_done_$tag"
-    if (!s.catalog.tableExists(doneT)) {
-      Seq(postT, dlT, dfT, posT, impT,
-          s"${dfT}__rewrite", s"${impT}__rewrite").foreach(t =>
-        if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`"))
+    val family @ Seq(postT, dlT, dfT, posT, impT, doneT) =
+      appendedLexFamily(dir)
+    graft.Staged.ensure(s, family: _*) {
       // the family builds over the corpus MINUS the purged ledger —
       // the ensureLabels never-staged posture: a purge DROPS this demo
       // family ([[dropAppendedLex]]) and the rebuild must not
@@ -858,14 +840,6 @@ object TextAnalysis {
         kOld, impactKOf(s, nNew), quantizedAvgDl(nNew, lNew))
       val ss = s
       import ss.implicits._
-      // the Bucketing.stage orphan discipline: files left under the
-      // default warehouse by an earlier JVM are invisible to this one's
-      // in-memory catalog, and CTAS refuses a non-empty location
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(doneT)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       Seq(1L).toDF("done").write.saveAsTable(doneT)
     }
     val (n, l) = lexAppStats.computeIfAbsent(
@@ -892,14 +866,8 @@ object TextAnalysis {
     * rebuild recomputes N over the reduced universe.
     */
   private[graft] def dropAppendedLex(s: SparkSession, dir: String): Unit = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    Seq(s"graft_lexapp_postings_$tag", s"graft_lexapp_doclen_$tag",
-      s"graft_lexapp_df_$tag", s"graft_lexapp_pos_$tag",
-      s"graft_lexapp_impact_$tag", s"graft_lexapp_done_$tag",
-      s"graft_lexapp_df_${tag}__rewrite",
-      s"graft_lexapp_impact_${tag}__rewrite",
-      s"graft_qsample_$tag").foreach(t =>
-      if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`"))
+    graft.Staged.drop(s, appendedLexFamily(dir): _*)
+    graft.Staged.drop(s, graft.Staged.name("qsample", dir))
     lexAppStats.remove((s.sparkContext.applicationId, dir))
     // the q194 stream-root pair is the same class of session demo —
     // physical erasure is the root deletion, and the next ensure
@@ -1476,16 +1444,15 @@ object TextAnalysis {
     * documents.
     */
   private[graft] def ensureImpactIndex(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val impT = s"graft_lex_impact_$tag"
+    val impT = graft.Staged.name("lex_impact", dir)
     val memoKey = (s.sparkContext.applicationId, dir)
-    graft.Bucketing.withStageLock(impT) { // double-checked (r22, §2.6)
-    if (!s.catalog.tableExists(impT)) {
+    graft.Staged.ensure(s, impT) {
       val (postT, dlT, _, n, l) = ensureLexIndex(s, dir)
       stageImpactFrom(s, impT, postT, dlT, impactKFor(s, dir),
         quantizedAvgDl(n, l))
       impactCurrent.put(memoKey, java.lang.Boolean.TRUE) // fresh ≡ current
-    } else if (!impactCurrent.containsKey(memoKey)) {
+    }
+    if (!impactCurrent.containsKey(memoKey)) {
       // CONSUME the q193 K-drift verdict instead of only publishing it
       // — the rebuild ACTION the admission card exists to trigger: a
       // purge rewrite can shrink a truncated list below the cut a
@@ -1509,28 +1476,19 @@ object TextAnalysis {
       // [[purgeLex]] clears the memo, the only in-session event that
       // can shrink stored lists. A current sidecar is untouched, so
       // every pinned serve plan is byte-identical until a purge lands.
+      // The lex ensure restores a df table a crashed purge swap left
+      // under its scratch name, so the consult reads the complete one.
       val (postT, dlT, dfT, n, l) = ensureLexIndex(s, dir)
-      // a purge re-run can land here INSIDE the df table's crashed
-      // swap window (completed rewrite under the scratch name, serve
-      // table dropped, rename pending) — the consult waits: the purge
-      // recovers the table and clears the memo again, so skipping now
-      // never strands a stale sidecar
-      if (s.catalog.tableExists(dfT)) {
-        val k = impactKFor(s, dir)
-        val stale = s.table(impT).groupBy("term")
+      val k = impactKFor(s, dir)
+      graft.Staged.restage(s, impT)(!impactCurrent.containsKey(memoKey) &&
+        s.table(impT).groupBy("term")
           .agg(count(lit(1)).as("len"))
           .join(s.table(dfT), Seq("term"))
           .filter(col("len") < least(col("df"), lit(k)))
-          .limit(1).count() > 0
-        if (stale) {
-          s.sql(s"DROP TABLE `$impT`")
-          stageImpactFrom(s, impT, postT, dlT, k,
-            quantizedAvgDl(n, l))
-        }
-        impactCurrent.put(memoKey, java.lang.Boolean.TRUE)
-      }
+          .limit(1).count() > 0)(
+        stageImpactFrom(s, impT, postT, dlT, k, quantizedAvgDl(n, l)))
+      impactCurrent.put(memoKey, java.lang.Boolean.TRUE)
     }
-    } // withStageLock
     impT
   }
 
@@ -1746,12 +1704,9 @@ object TextAnalysis {
     * phrase query in the session is a term-pruned bucketed scan.
     */
   private[graft] def ensurePosIndex(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val posT = s"graft_lex_pos_$tag"
-    graft.Bucketing.withStageLock(posT) { // double-checked (r22, §2.6)
-      if (!s.catalog.tableExists(posT))
-        stagePosFrom(s, Tables.wide(s, dir, "documents"), posT)
-    }
+    val posT = graft.Staged.name("lex_pos", dir)
+    graft.Staged.ensure(s, posT)(
+      stagePosFrom(s, Tables.wide(s, dir, "documents"), posT))
     posT
   }
 
@@ -2869,9 +2824,8 @@ object TextAnalysis {
     "q194_impact_stream_topk" -> ((s, dir) => {
       val (lexRoot, impRoot) = q194Roots.computeIfAbsent(
         (s.sparkContext.applicationId, dir), _ => {
-          val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-          val lr = Dedup.warehouseDir(s, s"graft_q194_lex_$tag")
-          val ir = Dedup.warehouseDir(s, s"graft_q194_imp_$tag")
+          val lr = Dedup.warehouseDir(s, graft.Staged.name("q194_lex", dir))
+          val ir = Dedup.warehouseDir(s, graft.Staged.name("q194_imp", dir))
           // the roots' universe excludes the purged ledger (a purge
           // deletes the roots — [[dropAppendedLex]] — and the rebuild
           // must not re-ingest erased documents)

@@ -76,6 +76,21 @@ private[graft] object BatchProtocol {
       .map(_.stripPrefix("batch_id=").toLong)
   }
 
+  /** Per-(session, root) memo of the root's INFERRED
+    * parquet schema — the [[graft.Tables]] schema-memo stance for the
+    * stream roots (r22): every serve paid a footer-inference job per
+    * read, over a layout that is FROZEN per root kind (epochs add
+    * partition VALUES, never columns). The value carries the root
+    * directory's mtime ([[graft.Tables.atMtime]]), so a new/removed
+    * epoch dir (the only events that could accompany a layout change)
+    * re-infers; an in-place epoch overwrite
+    * (crash redelivery) keeps the same writer schema by construction.
+    * The memoized schema is the reader's own inference output — the
+    * DataFrame is byte-identical.
+    */
+  private[graft] val rootSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, org.apache.spark.sql.types.StructType)]
+
   /** The index's SERVABLE rows: every epoch EXCEPT those superseded by
     * a present consolidated epoch. For each consolidated id c ≤ −2 the
     * epochs in [0, −c−2] are its merged originals, AND every LESS
@@ -100,20 +115,6 @@ private[graft] object BatchProtocol {
     * root holds no epoch at all (a new deployment probed before its
     * first batch — "empty index", not a read error).
     */
-  /** Per-(session, root, root-mtime) memo of the root's INFERRED
-    * parquet schema — the [[graft.Tables]] schema-memo stance for the
-    * stream roots (r22): every serve paid a footer-inference job per
-    * read, over a layout that is FROZEN per root kind (epochs add
-    * partition VALUES, never columns). The root directory's mtime rides
-    * in the key, so a new/removed epoch dir (the only events that could
-    * accompany a layout change) re-infers; an in-place epoch overwrite
-    * (crash redelivery) keeps the same writer schema by construction.
-    * The memoized schema is the reader's own inference output — the
-    * DataFrame is byte-identical.
-    */
-  private val rootSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), org.apache.spark.sql.types.StructType]
-
   def readServable(spark: SparkSession, indexPath: String)
       : Option[org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.functions.col
@@ -121,17 +122,11 @@ private[graft] object BatchProtocol {
     if (epochs.isEmpty) None
     else {
       val consolidated = epochs.filter(_ <= -2)
-      val key = (spark.sparkContext.applicationId, indexPath,
+      val raw = spark.read.schema(graft.Tables.atMtime(rootSchemaMemo,
+        (spark.sparkContext.applicationId, indexPath),
         fs(spark, indexPath).getFileStatus(new Path(indexPath))
-          .getModificationTime)
-      val memo = rootSchemaMemo.get(key)
-      val raw =
-        if (memo != null) spark.read.schema(memo).parquet(indexPath)
-        else {
-          val d = spark.read.parquet(indexPath)
-          rootSchemaMemo.put(key, d.schema)
-          d
-        }
+          .getModificationTime)(spark.read.parquet(indexPath).schema))
+        .parquet(indexPath)
       Some(if (consolidated.isEmpty) raw
       else {
         val keep = consolidated.min // most negative = highest watermark
