@@ -2,14 +2,8 @@ package graft.etl
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
-import org.apache.parquet.schema.Type.Repetition
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -27,7 +21,8 @@ import scala.util.Using
   * `DataFrame`, run no Spark plan and launch no Spark job, and they are the
   * only forms [[MetaStore]]'s tick calls. [[read]] and [[replace]] are the
   * `DataFrame` adapters over them, for callers that want a Spark view.
-  * Target DATA always goes through [[TargetStore]]'s distributed writes.
+  * Target data goes through [[TargetStore]], which writes each job's
+  * partition on the driver with the same [[DriverParquet]] writer.
   * Two backends ship, mirroring the reference's two agents:
   *
   *   - [[SnapshotMetaStorage]] — durable parquet snapshot directories with
@@ -100,13 +95,14 @@ object MetaStorage {
     }
 
   /** Refuses a column type other than bigint and string: the only types of
-    * the accounting schemas, and all the snapshot store writes. Both
-    * backends check, so a schema that runs on one runs on the other. */
+    * the accounting schemas and the target tables, and all
+    * [[DriverParquet]] writes. Both backends check, so a schema that runs
+    * on one runs on the other. */
   private[etl] def requireSupported(schema: StructType): Unit =
     schema.fields.find(f => f.dataType != LongType && f.dataType != StringType).foreach { f =>
       throw new IllegalArgumentException(
-        s"Accounting column ${f.name} has unsupported type ${f.dataType.simpleString}; " +
-          "the accounting store holds only bigint and string columns")
+        s"Column ${f.name} has unsupported type ${f.dataType.simpleString}; " +
+          "the driver parquet writer holds only bigint and string columns")
     }
 }
 
@@ -172,24 +168,12 @@ final class SnapshotMetaStorage(
     * by renames. An unsupported column type throws before anything is
     * written. */
   override def replaceRows(table: String, schema: StructType, rows: Seq[Row]): Unit = {
-    MetaStorage.requireSupported(schema)
-    val fileSchema = new MessageType("spark_schema", schema.fields.map(parquetField): _*)
     val dst = live(table)
     val tmp = new Path(tablePath(table) + ".tmp")
     val old = new Path(tablePath(table) + ".old")
     fs.delete(tmp, true) // a crashed replace may have left a partial part file
     // one part file even for zero rows: its footer carries the schema
-    val part = HadoopOutputFile.fromPath(new Path(tmp, "part-00000.snappy.parquet"), conf)
-    Using.resource(ExampleParquetWriter.builder(part).withConf(conf).withType(fileSchema)
-        .withCompressionCodec(CompressionCodecName.SNAPPY).build()) { writer =>
-      rows.foreach { r =>
-        val g = new SimpleGroup(fileSchema)
-        schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
-          if (schema(i).dataType == LongType) g.add(i, r.getLong(i)) else g.add(i, r.getString(i))
-        }
-        writer.write(g)
-      }
-    }
+    DriverParquet.write(conf, new Path(tmp, "part-00000.snappy.parquet"), schema, rows)
     fs.delete(old, true)
     if (fs.exists(dst)) fs.rename(dst, old)
     fs.rename(tmp, dst)
@@ -200,14 +184,6 @@ final class SnapshotMetaStorage(
     * snapshot is replaced: no read-while-overwrite hazard. */
   override def replace(table: String, df: DataFrame): Unit =
     replaceRows(table, df.schema, df.collect().toSeq)
-
-  /** The parquet column Spark writes for `f`, a bigint or string column: a
-    * non-nullable field is `required`, a nullable one `optional`. */
-  private def parquetField(f: StructField): Type = {
-    val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-    if (f.dataType == LongType) Types.primitive(INT64, rep).named(f.name)
-    else Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
-  }
 
   private def cell(g: Group, f: StructField): Any = {
     val t = g.getType

@@ -199,9 +199,10 @@ object Tombstones {
     // and skip a consolidation it still owes.
     val atThisWatermark = reqs.headOption.exists(n =>
       n == prefix || n.matches(java.util.regex.Pattern.quote(prefix) + "_\\d+"))
-    if (reqs.size == 1 && atThisWatermark) return
+    if (reqs.isEmpty || (reqs.size == 1 && atThisWatermark)) return
     val tmp = s"$indexPath/_tombstones_tmp"
-    spark.read.parquet(tombRoot(indexPath)).select(keyCol)
+    // the request dirs, not the `_`-named root Spark would take for hidden
+    spark.read.parquet(reqs.map(r => s"${tombRoot(indexPath)}/$r"): _*).select(keyCol)
       .distinct().coalesce(1).write.mode("overwrite").parquet(tmp)
     val target = Iterator.from(0)
       .map(k => if (k == 0) prefix else s"${prefix}_$k")

@@ -536,6 +536,29 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert((idleLoaded, idleJobs) == ((0, 0)))
   }
 
+  test("[snapshot] cold, idle and delta ticks start no Spark job and no SQL execution") {
+    val (dir, _, meta, targets) = freshWorld("snapshot")
+    writeZoe(dir)
+    // one tick as EtlMain runs it, with its row-count line; returns the
+    // sheets loaded
+    def tick(): Int = {
+      val tasks = new Tasks(new LocalGridSource(dir.toString), meta, targets, loadTime = 1746100000L)
+      tasks.setConfiguration(Seq(peopleCfg, zoeCfg))
+      meta.setUpAccounting()
+      tasks.findSomeUpdatedSpreadsheets()
+      val loaded = tasks.loadSomeUpdatedSpreadsheets()
+      assert(tasks.verifyOldestSpreadsheet())
+      loaded.foreach(j => targets.rowCount(j.targetTable))
+      loaded.size
+    }
+    assert(sparkWorkOf(tick()) == ((2, 0, 0)), "cold")
+    assert(sparkWorkOf(tick()) == ((0, 0, 0)), "idle")
+    writeZoe(dir, modified = "2026-05-06T00:00:00.000Z", name = "Yan")
+    assert(sparkWorkOf(tick()) == ((1, 0, 0)), "delta")
+    assert(targets.rowCount("renewals_2019") == 3 && targets.rowCount("zoe") == 1)
+    assert(targets.read("zoe").collect().map(_.getAs[String]("name")).toSeq == Seq("Yan"))
+  }
+
   test("[snapshot] a crash between replace's renames keeps the cursor and job ids") {
     val dir = Files.createTempDirectory("graft-fixtures")
     val wh = Files.createTempDirectory("graft-wh").toString

@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkTestSession
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -14,6 +15,19 @@ import scala.jdk.CollectionConverters._
   */
 class TargetCompactSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  /** The fixture writer: a Spark partition-overwrite write, as target
+    * loads were written before loads moved to the driver. It replaces
+    * exactly the partitions present in `df`, leaving all others
+    * untouched, so a fixture can fragment a partition into many files. */
+  private implicit class SparkWrites(store: TargetStore) {
+    def replaceJobPartition(targetTable: String, df: DataFrame): Unit =
+      df.write
+        .partitionBy("_origin_etl_job_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(store.path(targetTable))
+  }
 
   private def rows(store: TargetStore, t: String): Set[(Long, Long, String)] = {
     import spark.implicits._
@@ -129,6 +143,47 @@ class TargetCompactSpec extends AnyFunSuite {
     assert(store.compact("t") == ((0L, 0L)))
     assert(store.rowCount("t") == 0L)
     assert(!Files.exists(Paths.get(store.compactStage("t"))))
+  }
+
+  test("Spark-written and driver-written partitions read, count and compact as one table") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-tcompact-mixed").toString
+    val store = new TargetStore(spark, root, rowsPerChunk = 2)
+    store.replaceJobPartition("t",
+      (0 until 6).map(i => (1L, i.toLong, s"v$i"))
+        .toDF("_origin_etl_job_id", "_origin_row", "a").repartition(2))
+    store.replaceJobPartition("t",
+      (0 until 3).map(i => (2L, i.toLong, s"w$i"))
+        .toDF("_origin_etl_job_id", "_origin_row", "a"))
+    val jobIdType = store.read("t").schema("_origin_etl_job_id").dataType
+
+    // the reload adds a column whose normalized name keeps its space
+    val added = Normalize.columnNames(Seq("A", "First Name"))
+    assert(added == Seq("a", "first name"))
+    store.loadJobRows("t", 2L, added, (0 until 5).map(i => Seq(Some(s"x$i"), Some(s"f$i"))))
+    def all(): Set[(Long, Long, String, Option[String])] =
+      store.read("t").select(col("_origin_etl_job_id").cast("bigint"), col("_origin_row"),
+        col("a"), col("first name")).as[(Long, Long, String, Option[String])].collect().toSet
+    val expected = (0 until 6).map(i => (1L, i.toLong, s"v$i", None)).toSet ++
+      (0 until 5).map(i => (2L, i.toLong, s"x$i", Some(s"f$i")))
+    assert(all() == expected)
+    assert(store.read("t").schema("_origin_etl_job_id").dataType == jobIdType)
+    assert(store.rowCount("t") == store.read("t").count())
+    assert(store.rowCount("t") == 11L)
+
+    // a crashed Spark write's staging dir is hidden from both counts
+    val hidden = Paths.get(store.path("t"), ".spark-staging-0", "_origin_etl_job_id=1")
+    Files.createDirectories(hidden)
+    Files.list(Paths.get(store.path("t"), "_origin_etl_job_id=1")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).foreach(f => Files.copy(f, hidden.resolve(f.getFileName)))
+    assert(store.rowCount("t") == store.read("t").count() && store.rowCount("t") == 11L)
+    deleteTree(Paths.get(store.path("t"), ".spark-staging-0"))
+
+    assert(store.compact("t") == ((5L, 2L)))
+    assert(all() == expected)
+    assert(store.read("t").schema("_origin_etl_job_id").dataType == jobIdType)
+    assert(store.rowCount("t") == 11L)
+    assert(store.rowCount("absent") == 0L)
   }
 
   test("the --compact verb reports per-table outcomes and skips absent tables") {

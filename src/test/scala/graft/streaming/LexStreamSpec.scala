@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The incremental lexical index's contract ([[LexStream]]): after any
   * number of micro-batches, the accumulated index SERVES byte-identically
@@ -648,6 +649,29 @@ class LexStreamSpec extends AnyFunSuite {
     val reqs2 = f.listStatus(new org.apache.hadoop.fs.Path(s"$lex/_tombstones"))
       .map(_.getPath.getName).toSeq
     assert(reqs2 == Seq("req=compacted_2_1"), reqs2.toString)
+  }
+
+  test("consolidate reads the request dirs: no ignored-paths warning, the same keys") {
+    val root = Files.createTempDirectory("graft-tomb-consolidate").toString
+    Tombstones.delete(spark, root, Seq(1L, 2L), "a")
+    Tombstones.delete(spark, root, Seq(2L, 3L), "b")
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "consolidate-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try Tombstones.consolidate(spark, root, 5L, "doc_id")
+    finally { logger.removeAppender(appender); appender.stop() }
+    assert(!warnings.asScala.exists(_.contains("paths were ignored")), warnings)
+    assert(Tombstones.requests(spark, root, "doc_id").map { case (r, ids) => r -> ids.toSet } ==
+      Seq("compacted_5" -> Set(1L, 2L, 3L)))
   }
 
   test("a null id in a takedown request batch is ignored, not a crash loop") {
